@@ -108,21 +108,6 @@ object Bench {
       true
     }
     println(json)
-    // Round-18 (verdict #7): the complete per-query map ALSO goes to
-    // stdout in short CHUNKED lines (~40 entries each) so a bounded
-    // stdout tail reconstructs as many per-query numbers as its budget
-    // allows even when the one-line map above is truncated —
-    // belt-and-braces next to the tracked BENCH_FULL.json. Distinct
-    // metric name keeps line-by-line JSON consumers from
-    // double-counting; the total_tail line stays LAST and unchanged.
-    val chunkSize = 40
-    val entries = results.toSeq
-    val nChunks = (entries.size + chunkSize - 1) / chunkSize
-    entries.grouped(chunkSize).zipWithIndex.foreach { case (chunk, i) =>
-      val cqs = chunk.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"chunk","idx":$i,"of":$nChunks,"queries":$cqs}""")
-    }
     // The driver captures a bounded TAIL of stdout and the long per-query
     // line has been truncated past parsing three rounds running — a short
     // line printed LAST always survives the capture. Distinct metric name

@@ -37,49 +37,8 @@ object GraftSession {
       }
     }
 
-  /** Scale-adaptive shuffle sizing for the harness sessions (round-18,
-    * guide §2.2 "fewer, larger reduce partitions" / round-17 verdict
-    * "kill the anti-scaling"). The full bench ran FASTER on 8 cores
-    * than 32 because every shuffle at fixture scale fans into
-    * `spark.sql.shuffle.partitions` = cores tiny partitions and the
-    * per-task scheduling overhead dominates; AQE's coalescing left
-    * them alone because `parallelismFirst` (default true) refuses to
-    * coalesce below the session's default parallelism. Sizing
-    * reducers BY BYTES instead is the scale-correct behavior — at
-    * fixture scale a kB shuffle collapses to one task, at 100 TB the
-    * same rule yields thousands of advisory-sized reducers — so the
-    * conf, not a tuned constant, carries the scale adaptivity.
-    *
-    * `canChangeCachedPlanOutputPartitioning` lets the same rule reach
-    * the persisted loop-invariant edge caches of the iterative graph
-    * family (their one-time `repartition(key)` otherwise pins
-    * cores-many near-empty partitions that every superstep join must
-    * match). None of these change any query's rows — partitioning
-    * only.
-    *
-    * Advisory size is env-parameterized (SPARK_GRAFT_ADVISORY_MB).
-    * The local default is 8 MB, measured (round-18 sweep: 64 MB
-    * serialized the compute-heavy small-byte reducers of the
-    * closeness-family BFS — graph_closeness 5.9 → 9.6 s — while 8 MB
-    * kept kB-scale superstep shuffles at one task AND left MB-scale
-    * aggregation reducers parallel). Coalescing only MERGES partitions
-    * below the advisory — it never splits — so a small advisory is the
-    * CONSERVATIVE setting at production scale: reducers already above
-    * 8 MB are untouched, and cluster deployments whose shuffles are
-    * network-bound raise the env toward the guide's 100 MB-1 GB band. */
-  def applyRuntimeTuning(spark: SparkSession): Unit = {
-    // SPARK_GRAFT_COALESCE=bytes flips AQE to pure byte-sized reducers
-    // (parallelismFirst=false); unset/off keeps Spark's default
-    // parallelism-first behavior. Env-gated so the two policies A/B
-    // under the unchanged harness.
-    if (sys.env.get("SPARK_GRAFT_COALESCE").contains("bytes")) {
-      val advisoryMb = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "8")
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${advisoryMb}m")
-    }
-  }
+  /** Sets nothing: byte-sized AQE reducers ran slower than the default (112.7 vs 101.2 s bench). */
+  def applyRuntimeTuning(spark: SparkSession): Unit = ()
 
   /** Drop cached relations and any leftover persisted RDDs — the ONE
     * copy of the per-query block hygiene both harness drivers (Bench,

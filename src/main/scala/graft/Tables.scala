@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   * One parquet file per table; same schemas at every scale factor.
@@ -10,8 +14,78 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Parquet confs whose value changes the schema inference returns
+    * (`events` sets nanosAsLong mid-session). */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** What an inferred schema depends on: the path, every file under it
+    * as (path, length, modification time), and the inference confs. */
+  private final case class SchemaKey(path: String,
+      files: Vector[(String, Long, Long)], confs: Seq[Option[String]])
+
+  /** Inferred fixture schemas per session. Sessions are weak keys and
+    * the values never reference them, so an entry dies with its session;
+    * a stopped session's entry goes at the next call, since Spark itself
+    * can keep a stopped session reachable (thread-locals). */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, StructType]]()
+
+  private[graft] def holds(spark: SparkSession): Boolean =
+    schemas.synchronized(schemas.containsKey(spark))
+
+  /** A fixture table as a fresh relation: new expression ids on every
+    * call (self-joins resolve) and a full scan on every action; no rows
+    * are cached.
+    *
+    * Schema inference (a file listing, a footer read and one Spark job)
+    * runs once per session and fixture. Each later call passes the
+    * inferred schema to `spark.read.schema(...)`, which starts no job.
+    * The fixtures are assumed immutable while a session reads them;
+    * a cached schema is reused only while the key is unchanged: the
+    * session, the path, each file's length and modification time, and
+    * the session's parquet inference confs ([[inferenceConfs]]). Only
+    * the fixture dir comes through here; staged and scratch tables,
+    * whose paths change within a session, keep `spark.read.parquet`.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    listing(spark, path) match {
+      // A missing path: Spark raises its own error.
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = SchemaKey(path, files, inferenceConfs.map(spark.conf.getOption))
+        val cache = schemas.synchronized {
+          schemas.keySet.removeIf(_.sparkContext.isStopped)
+          schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[SchemaKey, StructType]())
+        }
+        Option(cache.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            cache.put(key, df.schema)
+            df
+        }
+    }
+  }
+
+  /** Every file under `path` (the path itself for a plain file) as
+    * (path, length, modification time); None if the path is missing.
+    * Plain `FileStatus` calls only: a `LocatedFileStatus` (`listFiles`)
+    * asks the local file system for permissions, which forks `ls`. */
+  private def listing(spark: SparkSession,
+      path: String): Option[Vector[(String, Long, Long)]] = try {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(f: FileStatus): Vector[FileStatus] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toVector.flatMap(files)
+      else Vector(f)
+    Some(files(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
+  } catch { case _: java.io.FileNotFoundException => None }
 
   /** FLOOR-division nanos→micros for a LONG nanosecond column — THE one
     * conversion both event loaders share (batch here, streaming in

@@ -1922,15 +1922,22 @@ object StatQueries {
         .agg(count(lit(1)).as("n_v"), count_if(col("pos")).as("p_v"))
       val tot = byScore.agg(sum(col("p_v")).cast("long").as("np"),
         sum(col("n_v") - col("p_v")).cast("long").as("nn"))
+      // The sweep runs in `value DESC` order as Spark and DuckDB sort it
+      // (NaN first, nulls last) through an ascending key: the class
+      // (NaN 0, number 1, null 2), then -value. -value alone would put
+      // NaN last and nulls first.
       val cum = graft.plans.GlobalRank.runningSums(
-          byScore.withColumn("negv", -col("value"))
+          byScore
+            .withColumn("vcls", when(isnan(col("value")), 0)
+              .when(col("value").isNull, 2).otherwise(1))
+            .withColumn("negv", -col("value"))
             .withColumn("q_v", col("n_v") - col("p_v")),
-          Seq("negv"), Seq("p_v", "q_v"), Seq("ctp", "cfp"))
+          Seq("vcls", "negv"), Seq("p_v", "q_v"), Seq("ctp", "cfp"))
         .crossJoin(broadcast(tot))
         .withColumn("j",
           col("ctp").cast("double") / col("np").cast("double")
             - col("cfp").cast("double") / col("nn").cast("double"))
-      cum.orderBy(col("j").desc, col("value"))
+      cum.orderBy(col("j").desc, col("value").asc_nulls_last)
         .limit(1)
         .select(col("value").as("threshold"), col("np").as("n_pos"),
           col("nn").as("n_neg"), col("ctp").as("tp"), col("cfp").as("fp"),

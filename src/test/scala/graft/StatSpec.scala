@@ -50,4 +50,27 @@ class StatSpec extends SparkSpec {
         s"AM >= GM >= HM violated: $r")
     }
   }
+
+  test("eval_youden_threshold sweeps NaN and null scores as value DESC does") {
+    import spark.implicits._
+    // value DESC (Spark and DuckDB): NaN first, nulls last. Sweeping by
+    // -value alone puts NaN last and nulls first, and picks NaN here.
+    val dir = Files.createTempDirectory("graft-stat").toString
+    Seq[(String, Option[Double])](("purchase", Some(Double.NaN)),
+      ("view", Some(5.0)), ("purchase", Some(3.0)), ("view", Some(1.0)),
+      ("view", None))
+      .toDF("event_type", "value")
+      .select(to_timestamp(lit("2024-01-01 00:00:00")).as("ts"),
+        col("event_type"), col("value"))
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val out = SparkEntry.queries("eval_youden_threshold")(spark, dir)
+      .collect()
+    assert(out.length == 1)
+    val r = out.head
+    // Sweep NaN(p) 5(n) 3(p) 1(n) null(n): J = 1/2, 1/6, 2/3, 1/3, 0.
+    assert(r.getAs[Double]("threshold") == 3.0, s"threshold: $r")
+    assert(r.getAs[Long]("tp") == 2L && r.getAs[Long]("fp") == 1L, s"$r")
+    assert(r.getAs[Long]("n_pos") == 2L && r.getAs[Long]("n_neg") == 3L)
+    assert(r.getAs[Double]("youden_j") == 0.6667, s"youden_j: $r")
+  }
 }
