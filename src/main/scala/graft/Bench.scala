@@ -1,16 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Min-of-passes with failure sentinel: a pass that threw reads +Inf;
-    * both passes failed → -1 (excluded from the total). Factored out so
-    * BenchSentinelSpec can pin the masquerading-speedup fix without a
-    * full bench run. */
-  private[graft] def combinePasses(a: Double, b: Double): Double = {
-    val m = math.min(a, b)
-    if (m.isInfinity) -1.0 else m
-  }
-  private[graft] def totalOf(rs: Iterable[Double]): Double =
-    rs.filter(_ >= 0).sum
+  /** Min-of-passes: a pass that threw reads +Inf, so any successful
+    * pass wins the min; both passes failed → None (written as null,
+    * named in "failed", excluded from the total). Factored out so
+    * BenchSentinelSpec can pin that a failure never reads as a time
+    * without a full bench run. */
+  private[graft] def combinePasses(a: Double, b: Double): Option[Double] =
+    Some(math.min(a, b)).filterNot(_.isInfinity)
+  private[graft] def totalOf(rs: Iterable[Option[Double]]): Double =
+    rs.flatten.sum
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -22,7 +21,6 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensureCheckpointDir(spark)
-    GraftSession.applyRuntimeTuning(spark)
     graft.plans.TopKPushdown.install(spark)
     // Warm the session (executor threads, codegen compiler, parquet
     // footer caches) so the first measured query isn't startup noise.
@@ -61,8 +59,8 @@ object Bench {
     // Round-18 (verdict #8): a throwing query used to be timed at its
     // time-to-throw (~0 s) and masqueraded as a speedup — now a failed
     // pass reads +Inf, the min-of-2 keeps any SUCCESSFUL pass's time,
-    // and a key that failed BOTH passes lands in the JSON as the -1
-    // sentinel and is excluded from the total.
+    // and a key that failed BOTH passes lands in the JSON as null, is
+    // named in the "failed" list and is excluded from the total.
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -82,12 +80,14 @@ object Bench {
     // tail-capturing driver doesn't truncate the leading queries (the
     // round-2 report lost ~25 entries to full-precision doubles).
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    // -1 failure sentinels are excluded from the total so a breakage
-    // can't read as a speedup (verdict #8).
+    val qs = results.map { case (k, v) =>
+      s"\"" + k + "\":" + v.fold("null")(f) }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, None) => s"\"$k\"" }
+      .mkString("[", ",", "]")
+    // Failed keys are excluded from the total so a breakage can't read
+    // as a speedup (verdict #8).
     val total = totalOf(results.values)
-    val json = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":2,"agg":"min","queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":2,"agg":"min","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     // Belt and braces: the same JSON goes to a TRACKED file (BENCH_FULL
     // .json — not gitignored), so the complete per-query map survives as
     // a committed artifact every round even though the driver's bounded

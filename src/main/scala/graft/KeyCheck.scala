@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 /** Local iteration harness (dev tool, not a driver surface): run named
   * declared keys at both small SFs and print row counts + head. */
 object KeyCheck {
@@ -10,25 +9,7 @@ object KeyCheck {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.ensureCheckpointDir(spark)
-    if (args.headOption.contains("--skewdebug")) {
-      import graft.Tables.t
-      for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-        val fact = t(spark, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"))
-          .withColumn("u", conv(substring(md5(concat(
-              col("l_orderkey").cast("string"), lit(":"),
-              col("l_linenumber").cast("string")).cast("binary")), 1, 13),
-            16, 10).cast("long"))
-          .withColumn("k", when(pmod(col("u"), lit(2L)) === 0L, lit(0L))
-            .otherwise(pmod(expr("u div 2"), lit(100L)) + 1L))
-        val sp = fact.withColumn("salt", pmod(hash(col("u")), lit(8)))
-          .groupBy("k", "salt").agg(count(lit(1)).as("c"))
-          .groupBy("k").agg(max("c").as("maxb"), sum("c").as("n"),
-            count(lit(1)).as("nb"))
-        sp.orderBy(expr("maxb * 8.0 / n").desc).show(8)
-      }
-      spark.stop(); return
-    }
+    graft.plans.TopKPushdown.install(spark)
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01");
          k <- args) {
       val rows = SparkEntry.queries(k)(spark, dir).collect()

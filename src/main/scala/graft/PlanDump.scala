@@ -11,6 +11,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.ensureCheckpointDir(spark)
+    graft.plans.TopKPushdown.install(spark)
     for (k <- args) {
       println(s"===== $k =====")
       val df = SparkEntry.queries(k)(spark, "/root/testdata/sf0.001")

@@ -21,7 +21,6 @@ object PlanDumpF {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     GraftSession.ensureCheckpointDir(spark)
-    GraftSession.applyRuntimeTuning(spark)
     graft.plans.TopKPushdown.install(spark)
     new java.io.File(outDir).mkdirs()
     for (k <- keys) {

@@ -19,9 +19,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.ensureCheckpointDir(spark)
-    // Same runtime tuning as Bench — the oracle-verified plans must be
-    // the benched plans.
-    GraftSession.applyRuntimeTuning(spark)
     graft.plans.TopKPushdown.install(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -253,20 +253,7 @@ object ScalarQueries {
     // the other key's job). Pure codegen'd row-local functions —
     // shuffle-free.
     "fn_parse_url" -> ((s, dir) => {
-      val d = col("doc_id")
-      val hostRaw = concat(lit("site"), (d % 50).cast("string"),
-        lit(".example.com"))
-      val url = concat(
-        when(d % 2 === 0, "https").otherwise("http"), lit("://"),
-        when(d % 3 === 0, upper(hostRaw)).otherwise(hostRaw),
-        lit("/a/item"), (d % 20).cast("string"),
-        when(d % 4 === 0, "/").otherwise(""),
-        when(d % 5 === 0,
-          concat(lit("?utm_source=feed&id="), (d % 10).cast("string")))
-          .when(d % 5 === 1, concat(lit("?id="), (d % 10).cast("string")))
-          .when(d % 5 === 2, lit("?utm_campaign=x"))
-          .otherwise(lit("")))
-      t(s, dir, "documents").select(d.as("doc_id"), url.as("url"))
+      graft.operators.CurationQueries.syntheticUrls(s, dir)
         .select(col("doc_id"), col("url"),
           parse_url(col("url"), lit("PROTOCOL")).as("proto"),
           parse_url(col("url"), lit("HOST")).as("host"),

@@ -48,6 +48,73 @@ object AggQueries {
       .agg(sum(col("t0").cast("decimal(38,0)")).as("tsum"))
   }
 
+  /** The click/purchase audience pair behind the HLL set-algebra
+    * keys: (flags, ests) with flags = per-user (user_id, c, p) exact
+    * 0/1 membership and ests = one row (ec, ep, eu) of the click,
+    * purchase and union sketch estimates (two single-pass sketches,
+    * union via the native hll_union). */
+  private def clickPurchaseSketches(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val e = events(s, dir)
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(col("event_type"), col("user_id"))
+    val per = e.groupBy("event_type")
+      .agg(hll_sketch_agg(col("user_id")).as("sk"))
+    val a = per.filter(col("event_type") === "click")
+      .select(col("sk").as("ska"))
+    val b = per.filter(col("event_type") === "purchase")
+      .select(col("sk").as("skb"))
+    val ests = a.crossJoin(b).select(
+        hll_sketch_estimate(col("ska")).as("ec"),
+        hll_sketch_estimate(col("skb")).as("ep"),
+        hll_sketch_estimate(hll_union(col("ska"), col("skb")))
+          .as("eu"))
+    val flags = e.groupBy("user_id")
+      .agg(max((col("event_type") === "click").cast("long")).as("c"),
+        max((col("event_type") === "purchase").cast("long")).as("p"))
+    (flags, ests)
+  }
+
+  /** Per-event (event_type, c, n, s1, a, sp, nchk, d) for the
+    * anchored moment keys: c = value in cents, a = s1 div n the
+    * type's integer anchor, d = c − a. nchk is n behind a raise_error
+    * guard (naming `key`) that |d| stays under 55,000 cents, where
+    * the LONG d⁴ is still exact. */
+  private def anchoredCents(s: SparkSession, dir: String,
+      key: String): DataFrame = {
+    val e = events(s, dir).select(col("event_type"),
+      round(col("value") * 100).cast("long").as("c"))
+    val s1 = e.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
+      .select(col("event_type"), col("n"), col("s1"),
+        expr("s1 div n").as("a"))
+    e.join(broadcast(s1), Seq("event_type"))
+      .withColumn("sp", abs(col("c") - col("a")).cast("double"))
+      .withColumn("nchk", graft.Det.checkedN(col("n"),
+        col("sp") < lit(55000.0),
+        s"$key: anchored spread exceeds the long-exact " +
+          "d^4 range — widen to decimal powers"))
+      .withColumn("d", col("c") - col("a"))
+  }
+
+  /** Central moments m2, m3, m4 from exact anchored sums (n, sd1..sd4
+    * = Σd..Σd⁴) by the binomial shift over δ = dl = sd1/n ∈ [0, 1),
+    * the exact gap between mean and anchor; also adds nn = n as
+    * double. */
+  private def withCentralMoments(m: DataFrame): DataFrame =
+    m.withColumn("nn", col("n").cast("double"))
+      .withColumn("dl", col("sd1").cast("double") / col("nn"))
+      .withColumn("m2", col("sd2").cast("double") / col("nn")
+        - col("dl") * col("dl"))
+      .withColumn("m3", col("sd3").cast("double") / col("nn")
+        - lit(3.0) * col("dl") * (col("sd2").cast("double") / col("nn"))
+        + lit(2.0) * col("dl") * col("dl") * col("dl"))
+      .withColumn("m4", col("sd4").cast("double") / col("nn")
+        - lit(4.0) * col("dl") * (col("sd3").cast("double") / col("nn"))
+        + lit(6.0) * col("dl") * col("dl")
+          * (col("sd2").cast("double") / col("nn"))
+        - lit(3.0) * col("dl") * col("dl") * col("dl") * col("dl"))
+
   val queries: Map[String, Q] = Map(
     "agg_global" -> ((s, dir) => {
       t(s, dir, "lineitem").agg(
@@ -157,26 +224,10 @@ object AggQueries {
     // standard sketch-intersection error model; PropertySpec pins
     // the same bands on the raw estimates — measured ≤1.4% / ≤1.2%).
     "agg_hll_intersection" -> ((s, dir) => {
-      val e = events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"), col("user_id"))
-      val per = e.groupBy("event_type")
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val a = per.filter(col("event_type") === "click")
-        .select(col("sk").as("ska"))
-      val b = per.filter(col("event_type") === "purchase")
-        .select(col("sk").as("skb"))
-      val ests = a.crossJoin(b).select(
-          hll_sketch_estimate(col("ska")).as("ec"),
-          hll_sketch_estimate(col("skb")).as("ep"),
-          hll_sketch_estimate(hll_union(col("ska"), col("skb")))
-            .as("eu"))
-        .withColumn("ei",
-          greatest(lit(0L), col("ec") + col("ep") - col("eu")))
-      val exact = e.groupBy("user_id")
-        .agg(max((col("event_type") === "click").cast("long")).as("c"),
-          max((col("event_type") === "purchase").cast("long")).as("p"))
-        .agg(sum(col("c")).as("exact_click"),
+      val (flags, sketches) = clickPurchaseSketches(s, dir)
+      val ests = sketches.withColumn("ei",
+        greatest(lit(0L), col("ec") + col("ep") - col("eu")))
+      val exact = flags.agg(sum(col("c")).as("exact_click"),
           sum(col("p")).as("exact_purchase"),
           sum(col("c") * col("p")).as("exact_intersection"))
       exact.crossJoin(broadcast(ests)).select(
@@ -205,25 +256,10 @@ object AggQueries {
     // difference estimate to 10% of the union size (PropertySpec
     // keeps the raw-estimate bands; measured ≤0.6% / 0.0%).
     "agg_hll_difference" -> ((s, dir) => {
-      val e = events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"), col("user_id"))
-      val per = e.groupBy("event_type")
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val a = per.filter(col("event_type") === "click")
-        .select(col("sk").as("ska"))
-      val b = per.filter(col("event_type") === "purchase")
-        .select(col("sk").as("skb"))
-      val ests = a.crossJoin(b).select(
-          hll_sketch_estimate(col("ska")).as("ec"),
-          hll_sketch_estimate(col("skb")).as("ep"),
-          hll_sketch_estimate(hll_union(col("ska"), col("skb")))
-            .as("eu"))
-        .withColumn("ed", greatest(lit(0L), col("eu") - col("ep")))
-      val exact = e.groupBy("user_id")
-        .agg(max((col("event_type") === "click").cast("long")).as("c"),
-          max((col("event_type") === "purchase").cast("long")).as("p"))
-        .agg(sum(col("c")).as("exact_click"),
+      val (flags, sketches) = clickPurchaseSketches(s, dir)
+      val ests = sketches.withColumn("ed",
+        greatest(lit(0L), col("eu") - col("ep")))
+      val exact = flags.agg(sum(col("c")).as("exact_click"),
           sum(col("p")).as("exact_purchase"),
           sum(col("c") * (lit(1L) - col("p"))).as("exact_click_only"))
       exact.crossJoin(broadcast(ests)).select(
@@ -971,20 +1007,8 @@ object AggQueries {
     // the exact integer variance numerator, never a NaN reaching the
     // compare.
     "agg_skew_kurtosis" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
-      val s1 = e.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
-        .select(col("event_type"), col("n"), col("s1"),
-          expr("s1 div n").as("a"))
-      val d = e.join(broadcast(s1), Seq("event_type"))
-        .withColumn("sp", abs(col("c") - col("a")).cast("double"))
-        .withColumn("nchk", graft.Det.checkedN(col("n"),
-          col("sp") < lit(55000.0),
-          "agg_skew_kurtosis: anchored spread exceeds the long-exact " +
-            "d^4 range — widen to decimal powers"))
-        .withColumn("d", col("c") - col("a"))
-      val m = d.groupBy(col("event_type"))
+      val d = anchoredCents(s, dir, "agg_skew_kurtosis")
+      val m = withCentralMoments(d.groupBy(col("event_type"))
         .agg(max(col("nchk")).as("n"),
           sum((col("d") * col("d")).cast("decimal(38,0)")).as("sd2"),
           sum((col("d") * col("d") * col("d")).cast("decimal(38,0)"))
@@ -995,20 +1019,7 @@ object AggQueries {
           // long sum would wrap past ~3×10⁹ rows/group and feed the
           // degeneracy test garbage — the one place the "exact to
           // 10²¹ rows" claim would otherwise silently break first.
-          sum(col("d").cast("decimal(38,0)")).as("sd1"))
-        // δ = Sd1/n ∈ [0, 1): the exact gap between mean and anchor.
-        .withColumn("nn", col("n").cast("double"))
-        .withColumn("dl", col("sd1").cast("double") / col("nn"))
-        .withColumn("m2", col("sd2").cast("double") / col("nn")
-          - col("dl") * col("dl"))
-        .withColumn("m3", col("sd3").cast("double") / col("nn")
-          - lit(3.0) * col("dl") * (col("sd2").cast("double") / col("nn"))
-          + lit(2.0) * col("dl") * col("dl") * col("dl"))
-        .withColumn("m4", col("sd4").cast("double") / col("nn")
-          - lit(4.0) * col("dl") * (col("sd3").cast("double") / col("nn"))
-          + lit(6.0) * col("dl") * col("dl")
-            * (col("sd2").cast("double") / col("nn"))
-          - lit(3.0) * col("dl") * col("dl") * col("dl") * col("dl"))
+          sum(col("d").cast("decimal(38,0)")).as("sd1")))
       // Exact degeneracy test: n·Σd² > Σd·Σd ⇔ variance > 0.
       m.filter(col("n") > 2 &&
           col("n") * col("sd2") > col("sd1") * col("sd1"))
@@ -1139,39 +1150,15 @@ object AggQueries {
     // (anchor, then moments), both partial-aggregating on
     // event_type.
     "agg_jarque_bera" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
-      val s1 = e.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
-        .select(col("event_type"), col("n"), col("s1"),
-          expr("s1 div n").as("a"))
-      val d = e.join(broadcast(s1), Seq("event_type"))
-        .withColumn("sp", abs(col("c") - col("a")).cast("double"))
-        .withColumn("nchk", graft.Det.checkedN(col("n"),
-          col("sp") < lit(55000.0),
-          "agg_jarque_bera: anchored spread exceeds the long-exact " +
-            "d^4 range — widen to decimal powers"))
-        .withColumn("d", col("c") - col("a"))
-      val m = d.groupBy(col("event_type"))
+      val d = anchoredCents(s, dir, "agg_jarque_bera")
+      val m = withCentralMoments(d.groupBy(col("event_type"))
         .agg(max(col("nchk")).as("n"),
           sum(col("d").cast("decimal(38,0)")).as("sd1"),
           sum((col("d") * col("d")).cast("decimal(38,0)")).as("sd2"),
           sum((col("d") * col("d") * col("d")).cast("decimal(38,0)"))
             .as("sd3"),
           sum((col("d") * col("d") * col("d") * col("d"))
-            .cast("decimal(38,0)")).as("sd4"))
-        .withColumn("nn", col("n").cast("double"))
-        .withColumn("dl", col("sd1").cast("double") / col("nn"))
-        .withColumn("m2", col("sd2").cast("double") / col("nn")
-          - col("dl") * col("dl"))
-        .withColumn("m3", col("sd3").cast("double") / col("nn")
-          - lit(3.0) * col("dl") * (col("sd2").cast("double") / col("nn"))
-          + lit(2.0) * col("dl") * col("dl") * col("dl"))
-        .withColumn("m4", col("sd4").cast("double") / col("nn")
-          - lit(4.0) * col("dl") * (col("sd3").cast("double") / col("nn"))
-          + lit(6.0) * col("dl") * col("dl")
-            * (col("sd2").cast("double") / col("nn"))
-          - lit(3.0) * col("dl") * col("dl") * col("dl") * col("dl"))
+            .cast("decimal(38,0)")).as("sd4")))
         .withColumn("sk", col("m3") / (col("m2") * sqrt(col("m2"))))
         .withColumn("ku",
           col("m4") / (col("m2") * col("m2")) - lit(3.0))
@@ -1252,16 +1239,7 @@ object AggQueries {
     // of IEEE-identical double ops, r4d at the edge. Degenerate arms
     // (n ≤ 1 or zero variance, by the exact integer test) drop.
     "ab_test_welch" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_type"),
-        when(substring(md5(col("user_id").cast("string").cast("binary")),
-          1, 1) < "8", "A").otherwise("B").as("arm"),
-        round(col("value") * 100).cast("long").as("c"))
-      val p1 = e.groupBy("event_type", "arm")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
-        .select(col("event_type"), col("arm"), col("n"),
-          expr("s1 div n").as("a"))
-      val m = e.join(broadcast(p1), Seq("event_type", "arm"))
-        .withColumn("d", col("c") - col("a"))
+      val m = StatQueries.withArmMoments(StatQueries.abAnchored(s, dir)
         // Loud bound (the agg_skew_kurtosis convention): d·d is a LONG
         // product before the decimal cast — past |d| ≈ 3.03×10⁹ cents
         // from the arm anchor it would wrap silently under non-ANSI
@@ -1273,14 +1251,7 @@ object AggQueries {
         .groupBy("event_type", "arm")
         .agg(max(col("nchk")).as("n"), max(col("a")).as("a"),
           sum(col("d").cast("decimal(38,0)")).as("d1"),
-          sum((col("d") * col("d")).cast("decimal(38,0)")).as("d2"))
-        .withColumn("nn", col("n").cast("double"))
-        .withColumn("mean",
-          col("a").cast("double") + col("d1").cast("double") / col("nn"))
-        // Sample variance: exact decimal numerator, one double divide.
-        .withColumn("v",
-          (col("n") * col("d2") - col("d1") * col("d1")).cast("double")
-            / (col("nn") * (col("nn") - lit(1.0))))
+          sum((col("d") * col("d")).cast("decimal(38,0)")).as("d2")))
       val a = m.filter(col("arm") === "A").select(col("event_type"),
         col("n").as("na"), col("nn").as("nna"), col("mean").as("ma"),
         col("v").as("va"), col("d1").as("d1a"), col("d2").as("d2a"))

@@ -45,7 +45,8 @@ object AnalyticsQueries {
     * same CTE chain. Kept in one place so a spine change (e.g.
     * per-type day bounds) cannot silently desynchronize the family.
     */
-  private def zeroFilledDaily(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def zeroFilledDaily(s: SparkSession,
+      dir: String): DataFrame = {
     val e = events(s, dir)
       .select(col("event_type"), epochDay("ts").as("day"))
     val d = e.groupBy("event_type", "day").agg(count(lit(1)).as("y"))
@@ -182,6 +183,68 @@ object AnalyticsQueries {
        |  FROM piv),
        |$steps""".stripMargin
   }
+
+  /** The DFT terms of each type's zero-filled daily series at the
+    * frequencies k = 1..10: (event_type, k, xs, nd) with xs the
+    * t-sorted (t, re_t, im_t) list of per-day terms y·cos/sin(2πkt/N)
+    * (N the calendar length) and nd its size; folding xs in order
+    * keeps every float sum shuffle-order-free (ts_periodogram,
+    * ts_spectral_entropy). */
+  private def dftTermLists(s: SparkSession, dir: String): DataFrame = {
+    val full = zeroFilledDaily(s, dir)
+    val b = full.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
+    val ks = s.range(1, 11).select(col("id").as("k"))
+    val terms = full.crossJoin(broadcast(b)).crossJoin(broadcast(ks))
+      .select(col("event_type"), col("k"),
+        (col("day") - col("lo")).as("t"),
+        (col("hi") - col("lo") + 1).as("nn"), col("y"))
+      .select(col("event_type"), col("k"), col("t"),
+        (col("y").cast("double")
+          * cos(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
+            / col("nn").cast("double"))).as("re_t"),
+        (col("y").cast("double")
+          * sin(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
+            / col("nn").cast("double"))).as("im_t"))
+    terms.groupBy("event_type", "k")
+      .agg(array_sort(collect_list(
+        struct(col("t"), col("re_t"), col("im_t")))).as("xs"),
+        count(lit(1)).as("nd"))
+  }
+
+  /** Activity-span survival over the user lifespans (last − first
+    * active day): (bounds, surv) with bounds = one row (mx, n_users)
+    * and surv = (n_users, k, c, `out`) on the zero-filled k = 0..mx
+    * spine — c users with lifespan k, `out` the survivors with
+    * lifespan ≥ k as a suffix sum (agg_survival_curve,
+    * agg_median_survival_time). */
+  private def lifespanSurvivors(s: SparkSession, dir: String,
+      out: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val lif = events(s, dir)
+      .select(col("user_id"), epochDay("ts").as("day"))
+      .groupBy("user_id")
+      .agg((max(col("day")) - min(col("day"))).as("lifespan"))
+    val hist = lif.groupBy("lifespan").agg(count(lit(1)).as("c"))
+    val bounds = lif.agg(max(col("lifespan")).as("mx"),
+      count(lit(1)).as("n_users"))
+    val spine = bounds.select(col("n_users"),
+      explode(sequence(lit(0L), col("mx"))).as("k"))
+    val wsuf = Window.orderBy(col("k").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val surv = spine.join(hist, col("k") === col("lifespan"), "left")
+      .select(col("n_users"), col("k"),
+        coalesce(col("c"), lit(0L)).as("c"))
+    (bounds, surv.withColumn(out, sum(col("c")).over(wsuf)))
+  }
+
+  /** Daily order revenue in exact cents: (day, rev), one row per
+    * order day (ts_rolling_sharpe, ts_variance_ratio,
+    * ts_sma_crossover). */
+  private def dailyRevenue(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .select(epochDay("o_orderdate").as("day"),
+        round(col("o_totalprice") * 100).cast("long").as("cents"))
+      .groupBy("day").agg(sum(col("cents")).as("rev"))
 
   val queries: Map[String, Q] = Map(
     // Ordered conversion funnel view → click → purchase: a user counts
@@ -1221,24 +1284,7 @@ object AnalyticsQueries {
     // length — so the whole frequency sweep is a constant-size tail
     // on one (type, day) reduce.
     "ts_periodogram" -> ((s, dir) => {
-      val full = zeroFilledDaily(s, dir)
-      val b = full.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      val ks = s.range(1, 11).select(col("id").as("k"))
-      val terms = full.crossJoin(broadcast(b)).crossJoin(broadcast(ks))
-        .select(col("event_type"), col("k"),
-          (col("day") - col("lo")).as("t"),
-          (col("hi") - col("lo") + 1).as("nn"), col("y"))
-        .select(col("event_type"), col("k"), col("t"),
-          (col("y").cast("double")
-            * cos(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
-              / col("nn").cast("double"))).as("re_t"),
-          (col("y").cast("double")
-            * sin(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
-              / col("nn").cast("double"))).as("im_t"))
-      terms.groupBy("event_type", "k")
-        .agg(array_sort(collect_list(
-          struct(col("t"), col("re_t"), col("im_t")))).as("xs"),
-          count(lit(1)).as("nd"))
+      dftTermLists(s, dir)
         .select(col("event_type"), col("k"), col("nd"),
           aggregate(col("xs"), lit(0.0), (a, x) => a + x("re_t")).as("re0"),
           aggregate(col("xs"), lit(0.0), (a, x) => a + x("im_t")).as("im0"))
@@ -1376,10 +1422,7 @@ object AnalyticsQueries {
     "ts_rolling_sharpe" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val D0 = "decimal(38,0)"
-      val daily = t(s, dir, "orders")
-        .select(epochDay("o_orderdate").as("day"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .groupBy("day").agg(sum(col("cents")).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wd = Window.orderBy(col("day"))
       val d = daily
         .withColumn("d1", col("rev") - lag(col("rev"), 1).over(wd))
@@ -1537,10 +1580,7 @@ object AnalyticsQueries {
     "ts_variance_ratio" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val D0 = "decimal(38,0)"
-      val daily = t(s, dir, "orders")
-        .select(epochDay("o_orderdate").as("day"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .groupBy("day").agg(sum(col("cents")).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wd = Window.orderBy(col("day"))
       val d = daily
         .withColumn("d1", col("rev") - lag(col("rev"), 1).over(wd))
@@ -1697,10 +1737,7 @@ object AnalyticsQueries {
     // readouts. One reduce to the bounded daily series + two windows.
     "ts_sma_crossover" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "orders")
-        .select(epochDay("o_orderdate").as("day"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .groupBy("day").agg(sum(col("cents")).as("rev"))
+      val daily = dailyRevenue(s, dir)
       val wd = Window.orderBy(col("day"))
       daily
         .withColumn("rn", row_number().over(wd))
@@ -1858,24 +1895,7 @@ object AnalyticsQueries {
     // device), so shuffle order can't move a ulp; power ratios and
     // logs at the edge, r4d.
     "ts_spectral_entropy" -> ((s, dir) => {
-      val full = zeroFilledDaily(s, dir)
-      val b = full.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      val ks = s.range(1, 11).select(col("id").as("k"))
-      val terms = full.crossJoin(broadcast(b)).crossJoin(broadcast(ks))
-        .select(col("event_type"), col("k"),
-          (col("day") - col("lo")).as("t"),
-          (col("hi") - col("lo") + 1).as("nn"), col("y"))
-        .select(col("event_type"), col("k"), col("t"),
-          (col("y").cast("double")
-            * cos(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
-              / col("nn").cast("double"))).as("re_t"),
-          (col("y").cast("double")
-            * sin(lit(2.0 * math.Pi) * (col("k") * col("t")).cast("double")
-              / col("nn").cast("double"))).as("im_t"))
-      val pw = terms.groupBy("event_type", "k")
-        .agg(array_sort(collect_list(
-          struct(col("t"), col("re_t"), col("im_t")))).as("xs"),
-          count(lit(1)).as("nd"))
+      val pw = dftTermLists(s, dir)
         .select(col("event_type"), col("k"),
           ((aggregate(col("xs"), lit(0.0), (a, x) => a + x("re_t"))
             * aggregate(col("xs"), lit(0.0), (a, x) => a + x("re_t"))
@@ -2027,22 +2047,7 @@ object AnalyticsQueries {
     // zero-filled onto the k spine so the curve has no holes. All
     // integers until the final share.
     "agg_survival_curve" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val lif = events(s, dir)
-        .select(col("user_id"), epochDay("ts").as("day"))
-        .groupBy("user_id")
-        .agg((max(col("day")) - min(col("day"))).as("lifespan"))
-      val hist = lif.groupBy("lifespan").agg(count(lit(1)).as("c"))
-      val bounds = lif.agg(max(col("lifespan")).as("mx"),
-        count(lit(1)).as("n_users"))
-      val spine = bounds.select(col("n_users"),
-        explode(sequence(lit(0L), col("mx"))).as("k"))
-      val wsuf = Window.orderBy(col("k").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      spine.join(hist, col("k") === col("lifespan"), "left")
-        .select(col("n_users"), col("k"),
-          coalesce(col("c"), lit(0L)).as("c"))
-        .withColumn("n_survivors", sum(col("c")).over(wsuf))
+      lifespanSurvivors(s, dir, "n_survivors")._2
         .select(col("k"), col("n_survivors"),
           r4d(col("n_survivors").cast("double")
             / col("n_users").cast("double")).as("survival"))
@@ -2057,24 +2062,8 @@ object AnalyticsQueries {
     // day horizons. Same lifespan histogram + suffix-sum spine as
     // the parent key; three bounded lookups and one threshold scan.
     "agg_median_survival_time" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val lif = events(s, dir)
-        .select(col("user_id"), epochDay("ts").as("day"))
-        .groupBy("user_id")
-        .agg((max(col("day")) - min(col("day"))).as("lifespan"))
-      val hist = lif.groupBy("lifespan").agg(count(lit(1)).as("c"))
-      val bounds = lif.agg(max(col("lifespan")).as("mx"),
-        count(lit(1)).as("n_users"))
-      val spine = bounds.select(col("n_users"),
-        explode(sequence(lit(0L), col("mx"))).as("k"))
-      val wsuf = Window.orderBy(col("k").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val surv = spine
-        .join(hist, col("k") === col("lifespan"), "left")
-        .select(col("n_users"), col("k"),
-          coalesce(col("c"), lit(0L)).as("c"))
-        .withColumn("ns", sum(col("c")).over(wsuf))
-        .localCheckpoint(true)
+      val (bounds, survivors) = lifespanSurvivors(s, dir, "ns")
+      val surv = survivors.localCheckpoint(true)
       val med = surv.filter(col("ns") * 2 <= col("n_users"))
         .agg(min(col("k")).as("median_lifespan_days"))
       def at(h: Int, nm: String) =

@@ -37,6 +37,28 @@ object CurationQueries {
         s"array_distinct(transform(sequence(0, size(toks)-$n), " +
           s"i -> concat_ws(' ', slice(toks, i+1, $n))))")).as("sh"))
 
+  /** (doc_id, url): one synthetic URL per document, built identically
+    * on both engines, with all four real-world noise classes live at
+    * every SF — http vs https (mod 2), host case (mod 3), trailing
+    * slash (mod 4), utm_* tracking params (mod 5). Shared by
+    * text_url_normalize and fn_parse_url. */
+  private[graft] def syntheticUrls(s: SparkSession, dir: String): DataFrame = {
+    val d = col("doc_id")
+    val hostRaw = concat(lit("site"), (d % 50).cast("string"),
+      lit(".example.com"))
+    val url = concat(
+      when(d % 2 === 0, "https").otherwise("http"), lit("://"),
+      when(d % 3 === 0, upper(hostRaw)).otherwise(hostRaw),
+      lit("/a/item"), (d % 20).cast("string"),
+      when(d % 4 === 0, "/").otherwise(""),
+      when(d % 5 === 0,
+        concat(lit("?utm_source=feed&id="), (d % 10).cast("string")))
+        .when(d % 5 === 1, concat(lit("?id="), (d % 10).cast("string")))
+        .when(d % 5 === 2, lit("?utm_campaign=x"))
+        .otherwise(lit("")))
+    t(s, dir, "documents").select(d.as("doc_id"), url.as("url"))
+  }
+
   val queries: Map[String, Q] = Map(
     // PER-SOURCE BOILERPLATE-LINE REMOVAL REPORT (§2.199) — the
     // CCNet/RefinedWeb boilerplate screen as a SOURCE-scoped pass
@@ -765,19 +787,6 @@ object CurationQueries {
     // capture-group replacements (Spark spells them $1, DuckDB \1 —
     // extract-and-rebuild sidesteps the incompatibility).
     "text_url_normalize" -> ((s, dir) => {
-      val d = col("doc_id")
-      val hostRaw = concat(lit("site"), (d % 50).cast("string"),
-        lit(".example.com"))
-      val url = concat(
-        when(d % 2 === 0, "https").otherwise("http"), lit("://"),
-        when(d % 3 === 0, upper(hostRaw)).otherwise(hostRaw),
-        lit("/a/item"), (d % 20).cast("string"),
-        when(d % 4 === 0, "/").otherwise(""),
-        when(d % 5 === 0,
-          concat(lit("?utm_source=feed&id="), (d % 10).cast("string")))
-          .when(d % 5 === 1, concat(lit("?id="), (d % 10).cast("string")))
-          .when(d % 5 === 2, lit("?utm_campaign=x"))
-          .otherwise(lit("")))
       val host = lower(regexp_extract(col("url"), "^https?://([^/?]+)", 1))
       val path = regexp_replace(
         regexp_extract(col("url"), "^https?://[^/?]+([^?]*)", 1), "/$", "")
@@ -785,7 +794,7 @@ object CurationQueries {
         regexp_extract(col("url"), "\\?(.*)$", 1),
         "utm_[a-z]+=[^&]*&?", ""), "&$", "")
       val w = Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))
-      t(s, dir, "documents").select(d.as("doc_id"), url.as("url"))
+      syntheticUrls(s, dir)
         .select(col("doc_id"), col("url"),
           concat(lit("https://"), host, path,
             when(q === "", "").otherwise(concat(lit("?"), q)))

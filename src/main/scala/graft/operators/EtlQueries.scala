@@ -25,6 +25,32 @@ import graft.Det.{dsum, r4d, sqlEpochDay, sqlSum}
 object EtlQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** The customer table and its synthetic next snapshot, full-outer
+    * joined on the key: (key, o_name, o_seg, o_bal, n_name, n_seg,
+    * n_bal). The next snapshot deletes mod-13 keys, bumps mod-7
+    * balances, moves mod-21 segments and re-inserts mod-11 keys
+    * under −key−1, so every diff branch is live at every SF. */
+  private def snapshotPair(s: SparkSession, dir: String): DataFrame = {
+    val base = t(s, dir, "customer")
+      .select(col("c_custkey").as("key"), col("c_name").as("name"),
+        col("c_mktsegment").as("seg"), col("c_acctbal").as("bal"))
+    val nw = base.filter(pmod(col("key"), lit(13)) =!= 0)
+      .select(col("key"), col("name"),
+        when(pmod(col("key"), lit(21)) === 0, lit("MOVED"))
+          .otherwise(col("seg")).as("seg"),
+        when(pmod(col("key"), lit(7)) === 0, col("bal") + 100.0)
+          .otherwise(col("bal")).as("bal"))
+      .unionAll(base.filter(pmod(col("key"), lit(11)) === 0)
+        .select((-col("key") - 1).as("key"),
+          concat(lit("new-"), col("key").cast("string")).as("name"),
+          col("seg"), col("bal")))
+    val o = base.select(col("key"), col("name").as("o_name"),
+      col("seg").as("o_seg"), col("bal").as("o_bal"))
+    val n = nw.select(col("key"), col("name").as("n_name"),
+      col("seg").as("n_seg"), col("bal").as("n_bal"))
+    o.join(n, Seq("key"), "full_outer")
+  }
+
   val queries: Map[String, Q] = Map(
     // OBSERVED DATA-QUALITY METRICS (§2.205) — Spark's Observation /
     // CollectMetrics machinery: metrics piggyback on a production
@@ -330,27 +356,10 @@ object EtlQueries {
     // changed-column list is concat_ws over per-column null-safe
     // comparisons — no UDF, no second pass.
     "etl_snapshot_diff" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("key"), col("c_name").as("name"),
-          col("c_mktsegment").as("seg"), col("c_acctbal").as("bal"))
-      val nw = base.filter(pmod(col("key"), lit(13)) =!= 0)
-        .select(col("key"), col("name"),
-          when(pmod(col("key"), lit(21)) === 0, lit("MOVED"))
-            .otherwise(col("seg")).as("seg"),
-          when(pmod(col("key"), lit(7)) === 0, col("bal") + 100.0)
-            .otherwise(col("bal")).as("bal"))
-        .unionAll(base.filter(pmod(col("key"), lit(11)) === 0)
-          .select((-col("key") - 1).as("key"),
-            concat(lit("new-"), col("key").cast("string")).as("name"),
-            col("seg"), col("bal")))
-      val o = base.select(col("key"), col("name").as("o_name"),
-        col("seg").as("o_seg"), col("bal").as("o_bal"))
-      val n = nw.select(col("key"), col("name").as("n_name"),
-        col("seg").as("n_seg"), col("bal").as("n_bal"))
       val diffName = !(col("o_name") <=> col("n_name"))
       val diffSeg = !(col("o_seg") <=> col("n_seg"))
       val diffBal = !(col("o_bal") <=> col("n_bal"))
-      o.join(n, Seq("key"), "full_outer")
+      snapshotPair(s, dir)
         .withColumn("change_type",
           when(col("o_name").isNull, "added")
             .when(col("n_name").isNull, "removed")
@@ -1004,25 +1013,8 @@ object EtlQueries {
     // comparisons counted with count_if — all exact integers in a
     // single 1-row reduce.
     "etl_column_churn" -> ((s, dir) => {
-      val base = t(s, dir, "customer")
-        .select(col("c_custkey").as("key"), col("c_name").as("name"),
-          col("c_mktsegment").as("seg"), col("c_acctbal").as("bal"))
-      val nw = base.filter(pmod(col("key"), lit(13)) =!= 0)
-        .select(col("key"), col("name"),
-          when(pmod(col("key"), lit(21)) === 0, lit("MOVED"))
-            .otherwise(col("seg")).as("seg"),
-          when(pmod(col("key"), lit(7)) === 0, col("bal") + 100.0)
-            .otherwise(col("bal")).as("bal"))
-        .unionAll(base.filter(pmod(col("key"), lit(11)) === 0)
-          .select((-col("key") - 1).as("key"),
-            concat(lit("new-"), col("key").cast("string")).as("name"),
-            col("seg"), col("bal")))
-      val o = base.select(col("key"), col("name").as("o_name"),
-        col("seg").as("o_seg"), col("bal").as("o_bal"))
-      val n = nw.select(col("key"), col("name").as("n_name"),
-        col("seg").as("n_seg"), col("bal").as("n_bal"))
       val matched = col("o_name").isNotNull && col("n_name").isNotNull
-      o.join(n, Seq("key"), "full_outer")
+      snapshotPair(s, dir)
         .agg(count(lit(1)).as("n_keys"),
           count_if(col("o_name").isNull).as("n_added"),
           count_if(col("n_name").isNull).as("n_removed"),

@@ -165,6 +165,67 @@ object GraphQueries {
       .repartition(col("src")).sortWithinPartitions("src")
       .persist()
 
+  /** The deduplicated co-purchase edges (a < b) labeled with both
+    * endpoints' brands: (b, a, ba, bb), two broadcast label joins.
+    * Shared by the brand conductance/modularity/cross-brand keys. */
+  private def brandEdges(s: SparkSession, dir: String): DataFrame = {
+    val co = partSetsByOrder(s, dir)
+      .select(explode(col("ps")).as("a"), col("ps"))
+      .select(col("a"), explode(col("ps")).as("b"))
+      .filter(col("a") < col("b"))
+      .distinct()
+    val brand = t(s, dir, "part")
+      .select(col("p_partkey"), col("p_brand"))
+    co
+      .join(broadcast(brand.select(col("p_partkey").as("a"),
+        col("p_brand").as("ba"))), Seq("a"))
+      .join(broadcast(brand.select(col("p_partkey").as("b"),
+        col("p_brand").as("bb"))), Seq("b"))
+  }
+
+  /** The capped wedge machinery of the link-prediction keys: (e, deg,
+    * mid) with e the persisted sampled oriented edges (a, b), deg the
+    * persisted per-node degree (v, deg) and mid the (v, n, deg, cap)
+    * neighbor rows whose middle v has degree at most the p95 degree
+    * cap (a data value off the degree histogram, so replay-stable). */
+  private def cappedWedgeMiddles(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val e = sampledOrientedEdges(s, dir, Some(Seq("0", "1"))).persist()
+    val nb = e.select(col("a").as("v"), col("b").as("n"))
+      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
+    val deg = nb.groupBy(col("v")).agg(count(lit(1)).as("deg")).persist()
+    val hist = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
+    val cap = hist
+      .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("deg"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("k", ceil(lit(0.95) * sum(col("cnt"))
+        .over(Window.partitionBy(lit(1)))).cast("long"))
+      .filter(col("cum") >= col("k"))
+      .agg(min(col("deg")).as("cap"))
+    val mid = nb.join(deg, "v").crossJoin(broadcast(cap))
+      .filter(col("deg") <= col("cap"))
+    (e, deg, mid)
+  }
+
+  /** The event-type transition relation behind the directed type-graph
+    * keys: (src, dst, n, n_from) — n consecutive same-user (src → dst)
+    * event pairs in (ms, event_id) order, n_from the src type's total. */
+  private def typeTransitions(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ms"), col("event_id"))
+    graft.Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        unix_millis(col("ts").cast("timestamp")).as("ms"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("n_from",
+        sum(col("n")).over(Window.partitionBy(col("src"))))
+  }
+
   val queries: Map[String, Q] = Map(
     "graph_pagerank" -> ((s, dir) => {
       // The loop lives in GraphAlgorithms.pageRank (one cached
@@ -723,18 +784,7 @@ object GraphQueries {
     // edge counts from the endpoint-exploded brand-labeled edge
     // table; (share desc on the rounded value, part) total order.
     "graph_cross_brand_parts" -> ((s, dir) => {
-      val co = partSetsByOrder(s, dir)
-        .select(explode(col("ps")).as("a"), col("ps"))
-        .select(col("a"), explode(col("ps")).as("b"))
-        .filter(col("a") < col("b"))
-        .distinct()
-      val brand = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_brand"))
-      val e2 = co
-        .join(broadcast(brand.select(col("p_partkey").as("a"),
-          col("p_brand").as("ba"))), Seq("a"))
-        .join(broadcast(brand.select(col("p_partkey").as("b"),
-          col("p_brand").as("bb"))), Seq("b"))
+      val e2 = brandEdges(s, dir)
       val per = e2.select(explode(array(
           struct(col("a").as("part"),
             (col("ba") =!= col("bb")).cast("long").as("x")),
@@ -761,18 +811,7 @@ object GraphQueries {
     // decimal integers end to end.
     "graph_brand_modularity" -> ((s, dir) => {
       val D0 = "decimal(38,0)"
-      val co = partSetsByOrder(s, dir)
-        .select(explode(col("ps")).as("a"), col("ps"))
-        .select(col("a"), explode(col("ps")).as("b"))
-        .filter(col("a") < col("b"))
-        .distinct()
-      val brand = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_brand"))
-      val e2 = co
-        .join(broadcast(brand.select(col("p_partkey").as("a"),
-          col("p_brand").as("ba"))), Seq("a"))
-        .join(broadcast(brand.select(col("p_partkey").as("b"),
-          col("p_brand").as("bb"))), Seq("b"))
+      val e2 = brandEdges(s, dir)
       val m = e2.agg(count(lit(1)).as("m"),
         count_if(col("ba") === col("bb")).as("si"))
       val vols = e2.select(explode(array(col("ba"), col("bb")))
@@ -797,18 +836,7 @@ object GraphQueries {
     // readout. Exact integer cut/volume counts off two broadcast
     // label joins; one |brands|-bounded reduce, one division.
     "graph_brand_conductance" -> ((s, dir) => {
-      val co = partSetsByOrder(s, dir)
-        .select(explode(col("ps")).as("a"), col("ps"))
-        .select(col("a"), explode(col("ps")).as("b"))
-        .filter(col("a") < col("b"))
-        .distinct()
-      val brand = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_brand"))
-      val e2 = co
-        .join(broadcast(brand.select(col("p_partkey").as("a"),
-          col("p_brand").as("ba"))), Seq("a"))
-        .join(broadcast(brand.select(col("p_partkey").as("b"),
-          col("p_brand").as("bb"))), Seq("b"))
+      val e2 = brandEdges(s, dir)
       val m = e2.agg(count(lit(1)).as("m"))
       val per = e2.select(explode(array(
           struct(col("ba").as("brand"),
@@ -1223,21 +1251,8 @@ object GraphQueries {
     // explode fan-out) at the p95 degree — bounded-memory by
     // construction, no hub can blow a task.
     "graph_jaccard_linkpred" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = sampledOrientedEdges(s, dir, Some(Seq("0", "1"))).persist()
-      val nb = e.select(col("a").as("v"), col("b").as("n"))
-        .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-      val deg = nb.groupBy(col("v")).agg(count(lit(1)).as("deg")).persist()
-      val hist = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
-      val cap = hist
-        .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("deg"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("k", ceil(lit(0.95) * sum(col("cnt"))
-          .over(Window.partitionBy(lit(1)))).cast("long"))
-        .filter(col("cum") >= col("k"))
-        .agg(min(col("deg")).as("cap"))
-      val nbmid = nb.join(deg, "v").crossJoin(broadcast(cap))
-        .filter(col("deg") <= col("cap")).select(col("v"), col("n"))
+      val (e, deg, mid) = cappedWedgeMiddles(s, dir)
+      val nbmid = mid.select(col("v"), col("n"))
       // Sorted lists ⇒ i < j iff ns[i] < ns[j] (neighbors are distinct
       // per v), so the (x < y) orientation falls out of slice().
       val pairs = nbmid.groupBy(col("v"))
@@ -1277,22 +1292,8 @@ object GraphQueries {
     // capped adjacency lists, map-side double explode, anti join
     // against existing edges.
     "graph_adamic_adar" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = sampledOrientedEdges(s, dir, Some(Seq("0", "1"))).persist()
-      val nb = e.select(col("a").as("v"), col("b").as("n"))
-        .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-      val deg = nb.groupBy(col("v")).agg(count(lit(1)).as("deg")).persist()
-      val hist = deg.groupBy(col("deg")).agg(count(lit(1)).as("cnt"))
-      val cap = hist
-        .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("deg"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("k", ceil(lit(0.95) * sum(col("cnt"))
-          .over(Window.partitionBy(lit(1)))).cast("long"))
-        .filter(col("cum") >= col("k"))
-        .agg(min(col("deg")).as("cap"))
-      val nbmid = nb.join(deg, "v").crossJoin(broadcast(cap))
-        .filter(col("deg") <= col("cap"))
-        .select(col("v"), col("n"), col("deg"))
+      val (e, _, mid) = cappedWedgeMiddles(s, dir)
+      val nbmid = mid.select(col("v"), col("n"), col("deg"))
       val pairs = nbmid.groupBy(col("v"))
         .agg(sort_array(collect_list(col("n"))).as("ns"),
           first(col("deg")).as("degv"))
@@ -1517,18 +1518,7 @@ object GraphQueries {
     // |types|² relation; reciprocity = |E ∩ Eᵀ|/|E| via one
     // self-join, exact integer counts, one division.
     "graph_reciprocity" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ms"), col("event_id"))
-      val trans = graft.Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_millis(col("ts").cast("timestamp")).as("ms"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n_from",
-          sum(col("n")).over(Window.partitionBy(col("src"))))
+      val trans = typeTransitions(s, dir)
       val nt = graft.Tables.events(s, dir)
         .select(col("event_type")).distinct()
         .agg(count(lit(1)).as("ntypes"))
@@ -1684,18 +1674,7 @@ object GraphQueries {
     }),
 
     "graph_scc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ms"), col("event_id"))
-      val trans = graft.Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_millis(col("ts").cast("timestamp")).as("ms"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n_from",
-          sum(col("n")).over(Window.partitionBy(col("src"))))
+      val trans = typeTransitions(s, dir)
       val nodes = graft.Tables.events(s, dir)
         .select(col("event_type").as("v")).distinct()
       val nt = nodes.agg(count(lit(1)).as("ntypes"))

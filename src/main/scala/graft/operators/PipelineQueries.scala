@@ -931,54 +931,8 @@ object PipelineQueries {
     // det fixture's ≤64 boxes/image), thresholds fan the pair table
     // ×2, then a 2-row reduce.
     "eval_det_f1_at_iou" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
-      val pred = jit.unionAll(fp)
-      val pairs0 = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-      val pairs = pairs0
-        .withColumn("thr", explode(array(lit(50L), lit(75L))))
-        .filter(col("inter") * 100 >= col("uni") * col("thr"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("thr", "image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("thr", "image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val tp = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
+      val (gt, pred) = detBoxes(s, dir)
+      val tp = mutualBest(iouPairs(gt, pred, sweep = true), Seq("thr"))
         .groupBy("thr").agg(count(lit(1)).as("tp"))
       val ngt = gt.agg(count(lit(1)).as("n_gt"))
       val ndet = pred.agg(count(lit(1)).as("n_det"))
@@ -998,60 +952,7 @@ object PipelineQueries {
     }),
 
     "eval_det_match" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
-      val pred = jit.unionAll(fp)
-      val pairs = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val nm = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
-        .groupBy("image_id").agg(count(lit(1)).as("nm"))
-      val ng = gt.groupBy("image_id").agg(count(lit(1)).as("n_gt"))
-      val np = pred.groupBy("image_id").agg(count(lit(1)).as("n_pred"))
-      ng.join(np, Seq("image_id"), "left")
-        .join(nm, Seq("image_id"), "left")
-        .select(col("image_id"), col("n_gt"),
-          coalesce(col("n_pred"), lit(0L)).as("n_pred"),
-          coalesce(col("nm"), lit(0L)).as("n_match"))
+      imageMatchCounts(s, dir)
         .select(col("image_id"), col("n_gt"), col("n_pred"),
           col("n_match"),
           when(col("n_pred") > 0, r4d(col("n_match").cast("double")
@@ -1076,15 +977,7 @@ object PipelineQueries {
     // below the presentation sort — embarrassingly parallel at any
     // corpus size.
     "multimodal_crop_chips" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"))
-        .select(col("k"), expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"),
-          col("sz"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      base
+      gridBoxes(s, dir)
         .withColumn("cx1",
           expr("(greatest(0L, gx1 - 16) div 8) * 8"))
         .withColumn("cy1",
@@ -1117,53 +1010,9 @@ object PipelineQueries {
     // per-image reduce (windows partition per image/box), then a
     // 1-row moment fold.
     "eval_count_ccc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val D0 = "decimal(38,0)"
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
-      val pred = jit.unionAll(fp)
-      val pairs = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val nm = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
+      val (gt, pred) = detBoxes(s, dir)
+      val nm = mutualBest(iouPairs(gt, pred))
         .groupBy("image_id").agg(count(lit(1)).as("nm"))
       val np = pred.groupBy("image_id").agg(count(lit(1)).as("np"))
       val per = gt.select(col("image_id")).distinct()
@@ -1265,60 +1114,17 @@ object PipelineQueries {
     // (image, box) exactly as eval_det_match — nothing global scales
     // with the corpus.
     "eval_det_ap" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
+      val (gt, det) = detBoxes(s, dir)
       // Bound the hash operand BEFORE the Knuth multiply: det_id grows
       // with the corpus and det_id * 2654435761 would exceed BIGINT
       // past ~3.4e9 keys — Spark wraps silently to negatives while
       // DuckDB raises, an engine divergence. pmod keeps the operand
       // < 1e6 so the product stays exact in both engines forever.
-      val pred = jit.unionAll(fp)
+      val pred = det
         .withColumn("score",
           pmod(pmod(col("det_id"), lit(1000000L)) * 2654435761L,
             lit(1000L)))
-      val pairs = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val tpDet = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
+      val tpDet = mutualBest(iouPairs(gt, pred))
         .select(col("image_id"), col("det_id"), lit(1L).as("is_tp"))
       val scored = pred.join(tpDet, Seq("image_id", "det_id"), "left")
         .groupBy("score").agg(count(lit(1)).as("n_det_s"),
@@ -1360,14 +1166,7 @@ object PipelineQueries {
     // assignment is embarrassingly parallel at any corpus size (the
     // eval_det_match fixture scales images with the corpus).
     "multimodal_anchor_assign" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"))
-        .select(col("k"), expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"),
-          col("sz"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
+      val base = gridBoxes(s, dir)
         .withColumn("cx", col("gx1") + 50)
         .withColumn("cy", col("gy1") + 50)
       base.withColumn("best", expr(
@@ -2601,60 +2400,16 @@ object PipelineQueries {
     // Output: one row per class (ap50/ap75/row mean) + the cls = −1
     // summary row whose `map` IS the COCO headline.
     "eval_map_coco" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          (col("k") % 5).as("cls"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("cls"),
-        col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("cls"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), col("cls"),
-          (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
+      val keys = Seq("image_id", "cls")
+      val (gt, det) = detBoxes(s, dir, keys)
       // Same bounded Knuth-hash score as eval_det_ap (pmod BEFORE the
       // multiply — the round-11 BIGINT-overflow fix).
-      val pred = jit.unionAll(fp)
+      val pred = det
         .withColumn("score",
           pmod(pmod(col("det_id"), lit(1000000L)) * 2654435761L,
             lit(1000L)))
-      val pairs = gt.join(pred, Seq("image_id", "cls"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .withColumn("thr", explode(array(lit(50L), lit(75L))))
-        .filter(col("inter") * 100 >= col("uni") * col("thr"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("thr", "cls", "image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("thr", "cls", "image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val tpDet = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
+      val tpDet = mutualBest(iouPairs(gt, pred, keys, sweep = true),
+          Seq("thr", "cls"))
         .select(col("thr"), col("cls"), col("image_id"), col("det_id"),
           lit(1L).as("is_tp"))
       val predT = pred
@@ -2772,56 +2527,13 @@ object PipelineQueries {
     // tertiles of its [2400, 4248] area range), matched = the same
     // IoU≥0.5 mutual-best matcher, recall = one division per bucket.
     "eval_det_recall_by_size" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-        .withColumn("area",
+      val (gt0, pred) = detBoxes(s, dir)
+      val gt = gt0.withColumn("area",
           (col("gx2") - col("gx1")) * (col("gy2") - col("gy1")))
         .withColumn("bucket",
           when(col("area") < 3000, "small")
             .when(col("area") < 3800, "medium").otherwise("large"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
-      val pred = jit.unionAll(fp)
-      val pairs = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val matched = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
+      val matched = mutualBest(iouPairs(gt, pred))
         .select(col("image_id"), col("gt_id"), lit(1L).as("m"))
       gt.join(matched, Seq("image_id", "gt_id"), "left")
         .groupBy("bucket")
@@ -2841,59 +2553,7 @@ object PipelineQueries {
     // TakeOrderedAndProject pattern) with the integer image_id
     // tie-break, and only the 10 survivors see the rank window.
     "multimodal_hard_example_mining" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-        .select(col("k"), col("sz"), col("cents"),
-          expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      val gt = base.select(col("image_id"), col("k").as("gt_id"),
-        col("gx1"), col("gy1"), col("gx2"), col("gy2"))
-      val jit = base.filter(col("k") % 13 =!= 0)
-        .withColumn("dx", col("sz") % 9 - 4
-          + when(col("k") % 17 === 0, 30).otherwise(0))
-        .withColumn("dy", col("cents") % 11 - 5)
-        .select(col("image_id"), col("k").as("det_id"),
-          (col("gx1") + col("dx")).as("px1"),
-          (col("gy1") + col("dy")).as("py1"),
-          (col("gx2") + col("dx")).as("px2"),
-          (col("gy2") + col("dy")).as("py2"))
-      val fp = base.filter(col("k") % 11 === 0)
-        .select(col("image_id"), (col("k") + 100000000L).as("det_id"),
-          (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
-          (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2"))
-      val pred = jit.unionAll(fp)
-      val pairs = gt.join(pred, Seq("image_id"))
-        .withColumn("inter",
-          greatest(lit(0L), least(col("gx2"), col("px2"))
-            - greatest(col("gx1"), col("px1")))
-          * greatest(lit(0L), least(col("gy2"), col("py2"))
-            - greatest(col("gy1"), col("py1"))))
-        .withColumn("uni",
-          (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
-          + (col("px2") - col("px1")) * (col("py2") - col("py1"))
-          - col("inter"))
-        .filter(col("inter") * 2 >= col("uni"))
-        .withColumn("iou",
-          col("inter").cast("double") / col("uni").cast("double"))
-      val wg = Window.partitionBy("image_id", "gt_id")
-        .orderBy(col("iou").desc, col("det_id"))
-      val wd = Window.partitionBy("image_id", "det_id")
-        .orderBy(col("iou").desc, col("gt_id"))
-      val nm = pairs.withColumn("rg", row_number().over(wg))
-        .withColumn("rd", row_number().over(wd))
-        .filter(col("rg") === 1 && col("rd") === 1)
-        .groupBy("image_id").agg(count(lit(1)).as("nm"))
-      val ng = gt.groupBy("image_id").agg(count(lit(1)).as("n_gt"))
-      val np = pred.groupBy("image_id").agg(count(lit(1)).as("n_pred"))
-      val f1 = ng.join(np, Seq("image_id"), "left")
-        .join(nm, Seq("image_id"), "left")
-        .select(col("image_id"), col("n_gt"),
-          coalesce(col("n_pred"), lit(0L)).as("n_pred"),
-          coalesce(col("nm"), lit(0L)).as("n_match"))
+      val f1 = imageMatchCounts(s, dir)
         .withColumn("f1", lit(2.0) * col("n_match").cast("double")
           / (col("n_gt") + col("n_pred")).cast("double"))
       val bottom = f1.orderBy(col("f1").asc, col("image_id")).limit(10)
@@ -2915,14 +2575,7 @@ object PipelineQueries {
     // parallel; shares eval_det_match's gt fixture so images scale
     // with the corpus at constant per-image box counts.
     "multimodal_mosaic_manifest" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"))
-        .select(col("k"), expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"), col("sz"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
-      base
+      gridBoxes(s, dir)
         .withColumn("mosaic_id", expr("image_id div 4"))
         .withColumn("quadrant", col("image_id") % 4)
         .withColumn("offx", (col("quadrant") % 2) * 400)
@@ -3085,13 +2738,7 @@ object PipelineQueries {
     // siblings: pure map-side arithmetic on the bounded image table +
     // one broadcast count join; pixels stay in the decode stubs.
     "multimodal_cutmix_manifest" -> ((s, dir) => {
-      val base = t(s, dir, "part").select(col("p_partkey").as("k"),
-        col("p_size").cast("long").as("sz"))
-        .select(col("k"), expr("k div 64").as("image_id"),
-          ((col("k") % 8) * 100).as("gx1"),
-          (expr("(k % 64) div 8") * 100).as("gy1"), col("sz"))
-        .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
-        .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
+      val base = gridBoxes(s, dir)
       val imgs = base.select(col("image_id")).distinct()
       val n = imgs.agg(count(lit(1)).as("n_images"))
       val man = imgs.crossJoin(broadcast(n))
@@ -3195,6 +2842,113 @@ object PipelineQueries {
         .orderBy("track_id")
     })
   )
+
+  /** The synthetic detection fixture's ground-truth boxes, one per
+    * part key, 64 per image (image_id = k div 64) on an 8×8 grid of
+    * 100-px cells, extents from p_size and k: (k, image_id, gx1, gy1,
+    * sz, gx2, gy2). The box-geometry keys read it directly;
+    * [[detBoxes]] builds the same boxes with a different column
+    * order, which the physical plans show. */
+  private def gridBoxes(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "part").select(col("p_partkey").as("k"),
+        col("p_size").cast("long").as("sz"))
+      .select(col("k"), expr("k div 64").as("image_id"),
+        ((col("k") % 8) * 100).as("gx1"),
+        (expr("(k % 64) div 8") * 100).as("gy1"), col("sz"))
+      .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
+      .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
+
+  /** (gt, pred) of the detection fixture: gt = (keys…, gt_id, gx1,
+    * gy1, gx2, gy2) are the [[gridBoxes]] boxes (cls = k % 5);
+    * pred = (keys…, det_id, px1, py1, px2, py2), each gt box
+    * jittered a few px (k % 13 = 0 missed, k % 17 = 0 shifted 30 px
+    * off) plus one false positive per k % 11 = 0. `keys` are the
+    * match keys carried on both sides. */
+  private def detBoxes(s: SparkSession, dir: String,
+      keys: Seq[String] = Seq("image_id")): (DataFrame, DataFrame) = {
+    val base = t(s, dir, "part").select(col("p_partkey").as("k"),
+        col("p_size").cast("long").as("sz"),
+        round(col("p_retailprice") * 100).cast("long").as("cents"))
+      .select(col("k"), col("sz"), col("cents"),
+        expr("k div 64").as("image_id"),
+        (col("k") % 5).as("cls"),
+        ((col("k") % 8) * 100).as("gx1"),
+        (expr("(k % 64) div 8") * 100).as("gy1"))
+      .withColumn("gx2", col("gx1") + 40 + col("sz") % 20)
+      .withColumn("gy2", col("gy1") + 60 + col("k") % 13)
+    val kc = keys.map(col)
+    val gt = base.select(kc ++ Seq(col("k").as("gt_id"),
+      col("gx1"), col("gy1"), col("gx2"), col("gy2")): _*)
+    val jit = base.filter(col("k") % 13 =!= 0)
+      .withColumn("dx", col("sz") % 9 - 4
+        + when(col("k") % 17 === 0, 30).otherwise(0))
+      .withColumn("dy", col("cents") % 11 - 5)
+      .select(kc ++ Seq(col("k").as("det_id"),
+        (col("gx1") + col("dx")).as("px1"),
+        (col("gy1") + col("dy")).as("py1"),
+        (col("gx2") + col("dx")).as("px2"),
+        (col("gy2") + col("dy")).as("py2")): _*)
+    val fp = base.filter(col("k") % 11 === 0)
+      .select(kc ++ Seq((col("k") + 100000000L).as("det_id"),
+        (col("gx1") + 50).as("px1"), (col("gy1") + 50).as("py1"),
+        (col("gx1") + 90).as("px2"), (col("gy1") + 110).as("py2")): _*)
+    (gt, jit.unionAll(fp))
+  }
+
+  /** Candidate (gt, pred) pairs sharing `keys` with their exact
+    * integer intersection/union areas, gated at IoU ≥ 0.5
+    * (inter·2 ≥ uni) or, with `sweep`, fanned to one row per
+    * threshold thr ∈ {50, 75} the pair clears (inter·100 ≥ uni·thr);
+    * the double iou is formed only after the integer gate. */
+  private def iouPairs(gt: DataFrame, pred: DataFrame,
+      keys: Seq[String] = Seq("image_id"),
+      sweep: Boolean = false): DataFrame = {
+    val pairs = gt.join(pred, keys)
+      .withColumn("inter",
+        greatest(lit(0L), least(col("gx2"), col("px2"))
+          - greatest(col("gx1"), col("px1")))
+        * greatest(lit(0L), least(col("gy2"), col("py2"))
+          - greatest(col("gy1"), col("py1"))))
+      .withColumn("uni",
+        (col("gx2") - col("gx1")) * (col("gy2") - col("gy1"))
+        + (col("px2") - col("px1")) * (col("py2") - col("py1"))
+        - col("inter"))
+    val gated =
+      if (sweep) pairs.withColumn("thr", explode(array(lit(50L), lit(75L))))
+        .filter(col("inter") * 100 >= col("uni") * col("thr"))
+      else pairs.filter(col("inter") * 2 >= col("uni"))
+    gated.withColumn("iou",
+      col("inter").cast("double") / col("uni").cast("double"))
+  }
+
+  /** One-to-one IoU matching: the pairs that are each other's best
+    * (highest iou, then lowest id) in both directions, per image and
+    * per `part` (the threshold, the class). */
+  private def mutualBest(pairs: DataFrame,
+      part: Seq[String] = Nil): DataFrame = {
+    def by(id: String) =
+      Window.partitionBy((part ++ Seq("image_id", id)).map(col): _*)
+    val wg = by("gt_id").orderBy(col("iou").desc, col("det_id"))
+    val wd = by("det_id").orderBy(col("iou").desc, col("gt_id"))
+    pairs.withColumn("rg", row_number().over(wg))
+      .withColumn("rd", row_number().over(wd))
+      .filter(col("rg") === 1 && col("rd") === 1)
+  }
+
+  /** Per-image (image_id, n_gt, n_pred, n_match) of the detection
+    * fixture at IoU ≥ 0.5, every image with ground truth present. */
+  private def imageMatchCounts(s: SparkSession, dir: String): DataFrame = {
+    val (gt, pred) = detBoxes(s, dir)
+    val nm = mutualBest(iouPairs(gt, pred))
+      .groupBy("image_id").agg(count(lit(1)).as("nm"))
+    val ng = gt.groupBy("image_id").agg(count(lit(1)).as("n_gt"))
+    val np = pred.groupBy("image_id").agg(count(lit(1)).as("n_pred"))
+    ng.join(np, Seq("image_id"), "left")
+      .join(nm, Seq("image_id"), "left")
+      .select(col("image_id"), col("n_gt"),
+        coalesce(col("n_pred"), lit(0L)).as("n_pred"),
+        coalesce(col("nm"), lit(0L)).as("n_match"))
+  }
 
   /** Shared detection/link/root-pointer tables behind the track keys
     * (§2.108 stitch + §2.111 kinematics): the per-frame grid fixture

@@ -39,7 +39,20 @@ object SimQueries {
     * by sim_centroid_classify (the matrix itself) and
     * eval_per_class_prf (its per-class P/R/F1 reduction) so the two
     * keys cannot disagree on a prediction. */
-  private def centroidConfusion(s: SparkSession, dir: String): DataFrame = {
+  private def centroidConfusion(s: SparkSession, dir: String): DataFrame =
+    centroidD2(s, dir)
+      .groupBy(col("vec_id"), col("label"))
+      .agg(min_by(col("clabel"), struct(col("d2"), col("clabel")))
+        .as("pred"))
+      .groupBy(col("label"), col("pred"))
+      .agg(count(lit(1)).as("n"))
+
+  /** Every (embedding row, label centroid) pair with its squared L2
+    * distance: the embeddings columns plus (clabel, cvec, d2). Each
+    * centroid is the decimal(38,12)-exact per-dimension mean divided
+    * once to a double; d2 folds in dimension order, so it is
+    * bit-stable across engines and partitionings. */
+  private def centroidD2(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val cent = emb
       .select(col("label"), posexplode(col("embedding")))
@@ -56,11 +69,70 @@ object SimQueries {
         zip_with(col("embedding"), col("cvec"),
           (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
         lit(0.0), (acc, e) => acc + e))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(min_by(col("clabel"), struct(col("d2"), col("clabel")))
-        .as("pred"))
-      .groupBy(col("label"), col("pred"))
-      .agg(count(lit(1)).as("n"))
+  }
+
+  /** The label-retrieval probe set: (emb, scored) with emb = (vec_id,
+    * v, label) and scored = (probe_id, plabel, vec_id, label, cos),
+    * the cosine of each probe (vec_id < 10, broadcast) against every
+    * other vector. */
+  private def probeScores(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val emb = t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+        col("label"))
+    val probes = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("v").as("p"),
+        col("label").as("plabel"))
+    val scored = emb.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
+        (ArrayDot(col("p"), col("v"))
+          / (sqrt(ArrayDot(col("p"), col("p")))
+            * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
+    (emb, scored)
+  }
+
+  /** A probe's ranking order: cosine descending, vec_id ties. */
+  private val probeRank = Window.partitionBy("probe_id")
+    .orderBy(col("cos").desc, col("vec_id"))
+
+  /** Each probe's 10 best rows under [[probeRank]], via the bounded
+    * per-group heap. */
+  private def probeTop10(scored: DataFrame): DataFrame =
+    graft.plans.TopKPerGroup(scored, k = 10,
+      partNames = Seq("probe_id"),
+      orderSpec = Seq(("cos", false), ("vec_id", true)))
+
+  /** NDCG weights for ranks 1..10 on an integer grid: (rk, wu, cumw)
+    * with wu = round(10¹²/log₂(rk+1)) and cumw its prefix sum (the
+    * ideal-DCG lookup), so DCG/IDCG is an exact BIGINT ratio. */
+  private def ndcgWeights(s: SparkSession): DataFrame =
+    s.range(1, 11).select(col("id").as("rk"),
+        round(lit(1e12) / log2(col("id").cast("double") + 1))
+          .cast("long").as("wu"))
+      .withColumn("cumw", sum(col("wu")).over(Window.orderBy("rk")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** The md5-ordered 100-anchor panel (replay-stable) scored against
+    * every other vector by squared L2: (aid, alabel, vec_id, label,
+    * d2), d2 folded in dimension order. */
+  private def anchorScores(s: SparkSession, dir: String): DataFrame = {
+    val emb = graft.Tables.embs(s, dir)
+      .select(col("vec_id"), col("label"),
+        col("embedding").cast("array<double>").as("v"))
+    val anchors = emb
+      .select(col("vec_id").as("aid"), col("label").as("alabel"),
+        col("v").as("av"),
+        md5(col("vec_id").cast("string").cast("binary")).as("h"))
+      .orderBy(col("h"), col("aid")).limit(100)
+      .select(col("aid"), col("alabel"), col("av"))
+    emb.crossJoin(broadcast(anchors))
+      .filter(col("vec_id") =!= col("aid"))
+      .select(col("aid"), col("alabel"), col("vec_id"),
+        col("label"),
+        aggregate(zip_with(col("av"), col("v"),
+          (a, x) => (a - x) * (a - x)),
+          lit(0.0), (acc, e) => acc + e).as("d2"))
   }
 
   val queries: Map[String, Q] = Map(
@@ -283,32 +355,11 @@ object SimQueries {
     // one corpus scan through the bounded TopKPerGroup heap; the
     // label-count table reduces map-side.
     "eval_ndcg_label" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-          col("label"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          col("label").as("plabel"))
-      val scored = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-          (ArrayDot(col("p"), col("v"))
-            / (sqrt(ArrayDot(col("p"), col("p")))
-              * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
-      val top = graft.plans.TopKPerGroup(scored, k = 10,
-        partNames = Seq("probe_id"),
-        orderSpec = Seq(("cos", false), ("vec_id", true)))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val wtab = s.range(1, 11).select(col("id").as("rk"),
-          round(lit(1e12) / log2(col("id").cast("double") + 1))
-            .cast("long").as("wu"))
-        .withColumn("cumw", sum(col("wu")).over(
-          org.apache.spark.sql.expressions.Window.orderBy("rk")
-            .rowsBetween(org.apache.spark.sql.expressions.Window
-              .unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)))
-      val ranked = top.withColumn("rk", row_number().over(w).cast("long"))
+      val (emb, scored) = probeScores(s, dir)
+      val top = probeTop10(scored)
+      val wtab = ndcgWeights(s)
+      val ranked = top
+        .withColumn("rk", row_number().over(probeRank).cast("long"))
         .join(broadcast(wtab.select("rk", "wu")), Seq("rk"))
       val perProbe = ranked.groupBy("probe_id")
         .agg(first(col("plabel")).as("plabel"),
@@ -337,21 +388,8 @@ object SimQueries {
     // probe; rr = one exact integer reciprocal, r4d'd. NDCG grades
     // the whole page; MRR grades the first hit — both faces declared.
     "eval_mrr_label" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-          col("label"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          col("label").as("plabel"))
-      val scored = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-          (ArrayDot(col("p"), col("v"))
-            / (sqrt(ArrayDot(col("p"), col("p")))
-              * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("vec_id"))
-      scored.withColumn("rk", row_number().over(w).cast("long"))
+      val (_, scored) = probeScores(s, dir)
+      scored.withColumn("rk", row_number().over(probeRank).cast("long"))
         .filter(col("label") === col("plabel"))
         .groupBy("probe_id")
         .agg(min(col("rk")).as("first_hit_rank"))
@@ -374,23 +412,10 @@ object SimQueries {
     // Same broadcast probe set and bounded per-probe ranking as the
     // rest of the triad.
     "eval_err" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-          col("label"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          col("label").as("plabel"))
-      val scored = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-          (ArrayDot(col("p"), col("v"))
-            / (sqrt(ArrayDot(col("p"), col("p")))
-              * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("vec_id"))
+      val (_, scored) = probeScores(s, dir)
       val wprev = Window.partitionBy("probe_id").orderBy("rk")
         .rowsBetween(Window.unboundedPreceding, -1)
-      scored.withColumn("rk", row_number().over(w).cast("long"))
+      scored.withColumn("rk", row_number().over(probeRank).cast("long"))
         .filter(col("rk") <= 10)
         .withColumn("rel",
           when(col("label") === col("plabel"), 1L).otherwise(0L))
@@ -417,27 +442,14 @@ object SimQueries {
     // bounded-heap TopKPerGroup(10) per probe, a 10-row window per
     // probe, broadcast label counts.
     "eval_ap_retrieval" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-          col("label"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          col("label").as("plabel"))
-      val scored = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-          (ArrayDot(col("p"), col("v"))
-            / (sqrt(ArrayDot(col("p"), col("p")))
-              * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
-      val top = graft.plans.TopKPerGroup(scored, k = 10,
-        partNames = Seq("probe_id"),
-        orderSpec = Seq(("cos", false), ("vec_id", true)))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val ranked = top.withColumn("rk", row_number().over(w).cast("long"))
+      val (emb, scored) = probeScores(s, dir)
+      val top = probeTop10(scored)
+      val ranked = top
+        .withColumn("rk", row_number().over(probeRank).cast("long"))
         .withColumn("rel", (col("label") === col("plabel")).cast("long"))
         .withColumn("cumrel", sum(col("rel")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          probeRank.rowsBetween(Window.unboundedPreceding,
+            Window.currentRow)))
       val perProbe = ranked.groupBy("probe_id")
         .agg(first(col("plabel")).as("plabel"),
           count_if(col("rel") === 1).as("hits10"),
@@ -530,22 +542,7 @@ object SimQueries {
     // vector is bounded and sorts by the bit-stable (d², label)
     // order the classify key's argmin already stakes on.
     "sim_classify_margin" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cent = emb
-        .select(col("label"), posexplode(col("embedding")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("double").cast("decimal(38,12)"))
-          .cast("double") / count(lit(1))).as("c"))
-      val carr = cent.groupBy("label")
-        .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-          .as("ps"))
-        .select(col("label").as("clabel"),
-          expr("transform(ps, p -> p.c)").as("cvec"))
-      val d2 = emb.crossJoin(broadcast(carr))
-        .withColumn("d2", aggregate(
-          zip_with(col("embedding"), col("cvec"),
-            (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-          lit(0.0), (acc, e) => acc + e))
+      val d2 = centroidD2(s, dir)
         .groupBy(col("vec_id"), col("label"))
         .agg(array_sort(collect_list(struct(col("d2"), col("clabel"))))
           .as("ds"))
@@ -728,22 +725,7 @@ object SimQueries {
     // 10 a quarter of the time" is what the retrieval team actually
     // needs to hear. One corpus scan + one per-anchor rank window.
     "eval_first_hit_rank_hist" -> ((s, dir) => {
-      val emb = graft.Tables.embs(s, dir)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("v"))
-      val anchors = emb
-        .select(col("vec_id").as("aid"), col("label").as("alabel"),
-          col("v").as("av"),
-          md5(col("vec_id").cast("string").cast("binary")).as("h"))
-        .orderBy(col("h"), col("aid")).limit(100)
-        .select(col("aid"), col("alabel"), col("av"))
-      val scored = emb.crossJoin(broadcast(anchors))
-        .filter(col("vec_id") =!= col("aid"))
-        .select(col("aid"), col("alabel"), col("vec_id"),
-          col("label"),
-          aggregate(zip_with(col("av"), col("v"),
-            (a, x) => (a - x) * (a - x)),
-            lit(0.0), (acc, e) => acc + e).as("d2"))
+      val scored = anchorScores(s, dir)
       val w = Window.partitionBy("aid")
         .orderBy(col("d2"), col("vec_id"))
       val fr = scored
@@ -780,21 +762,7 @@ object SimQueries {
     // 5/n means hubness is real and the index needs norm/centering
     // work. One corpus scan into bounded per-anchor heaps.
     "sim_hubness_profile" -> ((s, dir) => {
-      val emb = graft.Tables.embs(s, dir)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("v"))
-      val anchors = emb
-        .select(col("vec_id").as("aid"), col("v").as("av"),
-          md5(col("vec_id").cast("string").cast("binary")).as("h"))
-        .orderBy(col("h"), col("aid")).limit(100)
-        .select(col("aid"), col("av"))
-      val scored = emb.crossJoin(broadcast(anchors))
-        .filter(col("vec_id") =!= col("aid"))
-        .select(col("aid"), col("vec_id"), col("label"),
-          aggregate(zip_with(col("av"), col("v"),
-            (a, x) => (a - x) * (a - x)),
-            lit(0.0), (acc, e) => acc + e).as("d2"))
-      val top = graft.plans.TopKPerGroup(scored, k = 5,
+      val top = graft.plans.TopKPerGroup(anchorScores(s, dir), k = 5,
         partNames = Seq("aid"),
         orderSpec = Seq(("d2", true), ("vec_id", true)))
       val counts = top.groupBy(col("vec_id"), col("label"))
@@ -819,22 +787,7 @@ object SimQueries {
     // Scale: anchors broadcast; ONE corpus scan scores 100·n pairs
     // map-side into a bounded per-anchor top-1 — never corpus×corpus.
     "sim_loo_knn_accuracy" -> ((s, dir) => {
-      val emb = graft.Tables.embs(s, dir)
-        .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("v"))
-      val anchors = emb
-        .select(col("vec_id").as("aid"), col("label").as("alabel"),
-          col("v").as("av"),
-          md5(col("vec_id").cast("string").cast("binary")).as("h"))
-        .orderBy(col("h"), col("aid")).limit(100)
-        .select(col("aid"), col("alabel"), col("av"))
-      val scored = emb.crossJoin(broadcast(anchors))
-        .filter(col("vec_id") =!= col("aid"))
-        .select(col("aid"), col("alabel"), col("vec_id"),
-          col("label"),
-          aggregate(zip_with(col("av"), col("v"),
-            (a, x) => (a - x) * (a - x)),
-            lit(0.0), (acc, e) => acc + e).as("d2"))
+      val scored = anchorScores(s, dir)
       val top = graft.plans.TopKPerGroup(scored, k = 1,
         partNames = Seq("aid"),
         orderSpec = Seq(("d2", true), ("vec_id", true)))
@@ -931,37 +884,14 @@ object SimQueries {
     // no float DCG), same label-count ideal; per (probe, k) rows so
     // every value is an exact rational — no cross-probe float mean.
     "eval_ndcg_curve" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"), col("label"))
-      val probes = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          col("label").as("plabel"))
-      val scored = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("plabel"), col("vec_id"),
-          col("label"),
-          (ArrayDot(col("p"), col("v"))
-            / (sqrt(ArrayDot(col("p"), col("p")))
-              * sqrt(ArrayDot(col("v"), col("v"))))).as("cos"))
-      val top = graft.plans.TopKPerGroup(scored, k = 10,
-        partNames = Seq("probe_id"),
-        orderSpec = Seq(("cos", false), ("vec_id", true)))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val wtab = s.range(1, 11).select(col("id").as("rk"),
-          round(lit(1e12) / log2(col("id").cast("double") + 1))
-            .cast("long").as("wu"))
-        .withColumn("cumw", sum(col("wu")).over(
-          org.apache.spark.sql.expressions.Window.orderBy("rk")
-            .rowsBetween(org.apache.spark.sql.expressions.Window
-              .unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)))
+      val (emb, scored) = probeScores(s, dir)
+      val top = probeTop10(scored)
+      val wtab = ndcgWeights(s)
       val ks = s.range(4).select(
         when(col("id") === 0, 1L).when(col("id") === 1, 3L)
           .when(col("id") === 2, 5L).otherwise(10L).as("k"))
       val ranked = top
-        .withColumn("rk", row_number().over(w).cast("long"))
+        .withColumn("rk", row_number().over(probeRank).cast("long"))
         .join(broadcast(wtab.select("rk", "wu")), Seq("rk"))
         .crossJoin(broadcast(ks))
         .filter(col("rk") <= col("k"))
@@ -1181,22 +1111,7 @@ object SimQueries {
     // by the identical bit-stable d² fold, flag the truth at rank 1
     // and within rank ≤ 3. Exact counts per label, two divisions.
     "eval_topk_accuracy" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cent = emb
-        .select(col("label"), posexplode(col("embedding")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("double").cast("decimal(38,12)"))
-          .cast("double") / count(lit(1))).as("c"))
-      val carr = cent.groupBy("label")
-        .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-          .as("ps"))
-        .select(col("label").as("clabel"),
-          expr("transform(ps, p -> p.c)").as("cvec"))
-      val scored = emb.crossJoin(broadcast(carr))
-        .withColumn("d2", aggregate(
-          zip_with(col("embedding"), col("cvec"),
-            (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-          lit(0.0), (acc, e) => acc + e))
+      val scored = centroidD2(s, dir)
       val w = Window.partitionBy("vec_id")
         .orderBy(col("d2"), col("clabel"))
       scored.withColumn("rk", row_number().over(w))
@@ -1278,22 +1193,7 @@ object SimQueries {
     // correctly-rounded (not libm), so a, b, s and the bucket floor
     // are bit-identical — every output cell is an exact count.
     "sim_silhouette_centroid" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cent = emb
-        .select(col("label"), posexplode(col("embedding")))
-        .groupBy(col("label"), col("pos"))
-        .agg((sum(col("col").cast("double").cast("decimal(38,12)"))
-          .cast("double") / count(lit(1))).as("c"))
-      val carr = cent.groupBy("label")
-        .agg(array_sort(collect_list(struct(col("pos"), col("c"))))
-          .as("ps"))
-        .select(col("label").as("clabel"),
-          expr("transform(ps, p -> p.c)").as("cvec"))
-      val d2 = emb.crossJoin(broadcast(carr))
-        .withColumn("d2", aggregate(
-          zip_with(col("embedding"), col("cvec"),
-            (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-          lit(0.0), (acc, e) => acc + e))
+      val d2 = centroidD2(s, dir)
       val ab = d2.groupBy("vec_id", "label")
         .agg(max(when(col("clabel") === col("label"), col("d2")))
           .as("a2"),

@@ -53,22 +53,83 @@ object StatQueries {
         coalesce(col("cy0"), lit(0L)).as("cy"))
   }
 
-  /** Zero-filled (event_type, day, y) spine — the AnalyticsQueries
-    * zeroFilledDaily contract re-stated here for the stat keys that
-    * stratify the per-type calendar (seasonal Mann-Kendall). */
-  private def zeroFilledDailyEvents(s: SparkSession,
-      dir: String): DataFrame = {
-    val e = events(s, dir)
-      .select(col("event_type"), epochDay("ts").as("day"))
-    val d = e.groupBy("event_type", "day").agg(count(lit(1)).as("y"))
-    val spine = e.select("event_type").distinct()
-      .crossJoin(broadcast(
-        e.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))))
-      .select(col("event_type"),
-        explode(sequence(col("lo"), col("hi"))).as("day"))
-    spine.join(d, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("y"), lit(0L)).as("y"))
+  /** The A/B keys' anchored events: (event_type, arm, c, n, a, d) —
+    * arm A/B from the md5 of user_id, c = value in cents, n and
+    * a = s1 div n the arm's count and integer anchor, d = c − a, so
+    * Σd and Σd² stay small exact integers (ab_test_welch,
+    * agg_cohens_d). */
+  private[operators] def abAnchored(s: SparkSession, dir: String)
+      : DataFrame = {
+    val e = events(s, dir).select(col("event_type"),
+      when(substring(md5(col("user_id").cast("string").cast("binary")),
+        1, 1) < "8", "A").otherwise("B").as("arm"),
+      round(col("value") * 100).cast("long").as("c"))
+    val p1 = e.groupBy("event_type", "arm")
+      .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
+      .select(col("event_type"), col("arm"), col("n"),
+        expr("s1 div n").as("a"))
+    e.join(broadcast(p1), Seq("event_type", "arm"))
+      .withColumn("d", col("c") - col("a"))
+  }
+
+  /** Per-arm mean and sample variance from exact (n, a, d1 = Σd,
+    * d2 = Σd²) moments: adds nn = n as double, mean = a + d1/n and
+    * v = (n·d2 − d1²)/(n(n−1)) — an exact decimal numerator, one
+    * double divide. */
+  private[operators] def withArmMoments(m: DataFrame): DataFrame =
+    m.withColumn("nn", col("n").cast("double"))
+      .withColumn("mean",
+        col("a").cast("double") + col("d1").cast("double") / col("nn"))
+      .withColumn("v",
+        (col("n") * col("d2") - col("d1") * col("d1")).cast("double")
+          / (col("nn") * (col("nn") - lit(1.0))))
+
+  /** One-way ANOVA over `df`'s groups g of the LONG column `v`:
+    * (k, n, ss_between, ss_within, `stat`) with stat the F ratio.
+    * Per-group n/Σv/Σv² are exact BIGINTs; the one order-sensitive
+    * double step, Σ_g S_g²/n_g, folds over the group-key-sorted list,
+    * so the summation order is pinned on both engines
+    * (agg_anova_oneway, agg_levene_test). */
+  private def oneWayF(df: DataFrame, v: String, stat: String): DataFrame = {
+    val grp = df.groupBy("g").agg(count(lit(1)).as("n_g"),
+      sum(col(v)).as("s_g"), sum(col(v) * col(v)).as("q2_g"))
+    val one = grp.agg(
+      array_sort(collect_list(struct(col("g"), col("n_g"), col("s_g"),
+        col("q2_g")))).as("gs"))
+      .select(expr("size(gs)").cast("long").as("k"),
+        expr("aggregate(gs, 0L, (a, x) -> a + x.n_g)").as("n"),
+        expr("aggregate(gs, 0L, (a, x) -> a + x.s_g)").as("s"),
+        expr("aggregate(gs, 0L, (a, x) -> a + x.q2_g)").as("q2"),
+        expr("aggregate(gs, cast(0.0 as double), (a, x) -> " +
+          "a + cast(x.s_g * x.s_g as double) / cast(x.n_g as double))")
+          .as("bs"))
+    val ssb = col("bs") - (col("s").cast("double")
+      * col("s").cast("double") / col("n").cast("double"))
+    val ssw = col("q2").cast("double") - col("bs")
+    one.select(col("k"), col("n"), r4d(ssb).as("ss_between"),
+      r4d(ssw).as("ss_within"),
+      when(col("k") > 1 && col("n") > col("k") && ssw > 0,
+        r4d((ssb / (col("k") - 1).cast("double"))
+          / (ssw / (col("n") - col("k")).cast("double"))))
+        .as(stat))
+  }
+
+  /** The event-type × day-of-week contingency cells with their margins:
+    * (event_type, dw, obs, r, c, n) — r the type's row total, c the
+    * weekday's column total, n the grand total (agg_cramers_v,
+    * agg_g_test). */
+  private def typeDowCells(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cells = events(s, dir)
+      .select(col("event_type"), dow(epochDay("ts")).as("dw"))
+      .groupBy("event_type", "dw").agg(count(lit(1)).as("obs"))
+    val wr = Window.partitionBy("event_type")
+    val wc = Window.partitionBy("dw")
+    val wn = Window.partitionBy()
+    cells
+      .withColumn("r", sum(col("obs")).over(wr))
+      .withColumn("c", sum(col("obs")).over(wc))
+      .withColumn("n", sum(col("obs")).over(wn))
   }
 
   val queries: Map[String, Q] = Map(
@@ -571,27 +632,7 @@ object StatQueries {
     "agg_anova_oneway" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").select(col("l_returnflag").as("g"),
         round(col("l_quantity")).cast("long").as("q"))
-      val grp = li.groupBy("g").agg(count(lit(1)).as("n_g"),
-        sum(col("q")).as("s_g"), sum(col("q") * col("q")).as("q2_g"))
-      val one = grp.agg(
-        array_sort(collect_list(struct(col("g"), col("n_g"), col("s_g"),
-          col("q2_g")))).as("gs"))
-        .select(expr("size(gs)").cast("long").as("k"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.n_g)").as("n"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.s_g)").as("s"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.q2_g)").as("q2"),
-          expr("aggregate(gs, cast(0.0 as double), (a, x) -> " +
-            "a + cast(x.s_g * x.s_g as double) / cast(x.n_g as double))")
-            .as("bs"))
-      val ssb = col("bs") - (col("s").cast("double")
-        * col("s").cast("double") / col("n").cast("double"))
-      val ssw = col("q2").cast("double") - col("bs")
-      one.select(col("k"), col("n"), r4d(ssb).as("ss_between"),
-        r4d(ssw).as("ss_within"),
-        when(col("k") > 1 && col("n") > col("k") && ssw > 0,
-          r4d((ssb / (col("k") - 1).cast("double"))
-            / (ssw / (col("n") - col("k")).cast("double"))))
-          .as("f_stat"))
+      oneWayF(li, "q", "f_stat")
     }),
 
     // LAGGED CROSS-CORRELATION (§2.88) — Pearson r between the daily
@@ -752,7 +793,7 @@ object StatQueries {
     // never the corpus. Exact integer S and Var·18; doubles at the
     // z edge.
     "ts_seasonal_mann_kendall" -> ((s, dir) => {
-      val d = zeroFilledDailyEvents(s, dir)
+      val d = AnalyticsQueries.zeroFilledDaily(s, dir)
         .withColumn("dow", col("day") % 7)
       val a = d.select(col("event_type"), col("dow"),
         col("day").as("d1"), col("y").as("v1"))
@@ -809,27 +850,7 @@ object StatQueries {
         |FROM lev_q GROUP BY g""".stripMargin)
       val z = li.join(broadcast(med), Seq("g"))
         .select(col("g"), abs(col("q") - col("med")).as("z"))
-      val grp = z.groupBy("g").agg(count(lit(1)).as("n_g"),
-        sum(col("z")).as("s_g"), sum(col("z") * col("z")).as("q2_g"))
-      val one = grp.agg(
-        array_sort(collect_list(struct(col("g"), col("n_g"), col("s_g"),
-          col("q2_g")))).as("gs"))
-        .select(expr("size(gs)").cast("long").as("k"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.n_g)").as("n"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.s_g)").as("s"),
-          expr("aggregate(gs, 0L, (a, x) -> a + x.q2_g)").as("q2"),
-          expr("aggregate(gs, cast(0.0 as double), (a, x) -> " +
-            "a + cast(x.s_g * x.s_g as double) / cast(x.n_g as double))")
-            .as("bs"))
-      val ssb = col("bs") - (col("s").cast("double")
-        * col("s").cast("double") / col("n").cast("double"))
-      val ssw = col("q2").cast("double") - col("bs")
-      one.select(col("k"), col("n"), r4d(ssb).as("ss_between"),
-        r4d(ssw).as("ss_within"),
-        when(col("k") > 1 && col("n") > col("k") && ssw > 0,
-          r4d((ssb / (col("k") - 1).cast("double"))
-            / (ssw / (col("n") - col("k")).cast("double"))))
-          .as("w_stat"))
+      oneWayF(z, "z", "w_stat")
     }),
 
     // CRAMÉR'S V (§2.91) — the effect size agg_chi2_independence's
@@ -844,17 +865,7 @@ object StatQueries {
     // operands. Shape: one O(rows) reduce to the cell table, then a
     // 1-row fold — r and c are count_distincts over ≤35 rows.
     "agg_cramers_v" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val cells = events(s, dir)
-        .select(col("event_type"), dow(epochDay("ts")).as("dw"))
-        .groupBy("event_type", "dw").agg(count(lit(1)).as("obs"))
-      val wr = Window.partitionBy("event_type")
-      val wc = Window.partitionBy("dw")
-      val wn = Window.partitionBy()
-      val contrib = cells
-        .withColumn("r", sum(col("obs")).over(wr))
-        .withColumn("c", sum(col("obs")).over(wc))
-        .withColumn("n", sum(col("obs")).over(wn))
+      val contrib = typeDowCells(s, dir)
         .withColumn("e",
           (col("r") * col("c")).cast("double") / col("n").cast("double"))
         .withColumn("contrib",
@@ -1125,17 +1136,7 @@ object StatQueries {
     // 0 by the o·ln(o/e) → 0 limit and are absent from the cell table
     // anyway. Shape: one O(rows) reduce, then a 1-row fold.
     "agg_g_test" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val cells = events(s, dir)
-        .select(col("event_type"), dow(epochDay("ts")).as("dw"))
-        .groupBy("event_type", "dw").agg(count(lit(1)).as("obs"))
-      val wr = Window.partitionBy("event_type")
-      val wc = Window.partitionBy("dw")
-      val wn = Window.partitionBy()
-      val contrib = cells
-        .withColumn("r", sum(col("obs")).over(wr))
-        .withColumn("c", sum(col("obs")).over(wc))
-        .withColumn("n", sum(col("obs")).over(wn))
+      val contrib = typeDowCells(s, dir)
         .withColumn("contrib", col("obs").cast("double")
           * log(col("obs").cast("double")
             / ((col("r") * col("c")).cast("double")
@@ -1418,26 +1419,11 @@ object StatQueries {
     // O(rows) passes to 2·|types| moment rows, then 1-row-per-type
     // arithmetic.
     "agg_cohens_d" -> ((s, dir) => {
-      val e = events(s, dir).select(col("event_type"),
-        when(substring(md5(col("user_id").cast("string").cast("binary")),
-          1, 1) < "8", "A").otherwise("B").as("arm"),
-        round(col("value") * 100).cast("long").as("c"))
-      val p1 = e.groupBy("event_type", "arm")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"))
-        .select(col("event_type"), col("arm"), col("n"),
-          expr("s1 div n").as("a"))
-      val m = e.join(broadcast(p1), Seq("event_type", "arm"))
-        .withColumn("d", col("c") - col("a"))
+      val m = withArmMoments(abAnchored(s, dir)
         .groupBy("event_type", "arm")
         .agg(max(col("n")).as("n"), max(col("a")).as("a"),
           sum(col("d").cast("decimal(38,0)")).as("d1"),
-          sum((col("d") * col("d")).cast("decimal(38,0)")).as("d2"))
-        .withColumn("nn", col("n").cast("double"))
-        .withColumn("mean",
-          col("a").cast("double") + col("d1").cast("double") / col("nn"))
-        .withColumn("v",
-          (col("n") * col("d2") - col("d1") * col("d1")).cast("double")
-            / (col("nn") * (col("nn") - lit(1.0))))
+          sum((col("d") * col("d")).cast("decimal(38,0)")).as("d2")))
       val a = m.filter(col("arm") === "A").select(col("event_type"),
         col("n").as("na"), col("nn").as("nna"), col("mean").as("ma"),
         col("v").as("va"))

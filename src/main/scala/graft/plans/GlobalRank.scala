@@ -127,41 +127,8 @@ object GlobalRank {
     * harness drivers do this between queries).
     */
   def runningSum(df: DataFrame, orderCols: Seq[String], valueCol: String,
-      outCol: String = "cum", numPartitions: Int = 0): DataFrame = {
-    require(orderCols.nonEmpty, "runningSum needs at least one order column")
-    require(!df.columns.contains(outCol),
-      s"runningSum appends column '$outCol' — rename the input's clashing " +
-        s"column first (input: ${df.columns.mkString(", ")})")
-    require(df.schema(valueCol).dataType == LongType,
-      s"exact prefix sums need a LONG value column, got " +
-        s"${df.schema(valueCol).dataType.simpleString} for '$valueCol'")
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val vIdx = df.schema.fieldIndex(valueCol)
-    // Same persist-one-partitioning rule as percentCume: the offsets are
-    // counted against exactly the partitioning the prefix pass reads.
-    val rangedRdd = df.repartitionByRange(parts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.head, orderCols.tail: _*)
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sums = rangedRdd
-      .mapPartitionsWithIndex((pid, it) =>
-        Iterator((pid, it.foldLeft(0L)((acc, r) => acc + r.getLong(vIdx)))))
-      .collect().toMap
-    val nParts = rangedRdd.getNumPartitions
-    val offsets = new Array[Long](nParts + 1)
-    (0 until nParts).foreach(i =>
-      offsets(i + 1) = offsets(i) + sums.getOrElse(i, 0L))
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, LongType, nullable = false))
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-    val out = rangedRdd.mapPartitionsWithIndex { (pid, rows) =>
-      var acc = bOffsets.value(pid)
-      rows.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
-    }
-    spark.createDataFrame(out, outSchema)
-  }
+      outCol: String = "cum", numPartitions: Int = 0): DataFrame =
+    runningSums(df, orderCols, Seq(valueCol), Seq(outCol), numPartitions)
 
   /** Multi-column [[runningSum]]: append one INCLUSIVE running-sum
     * column per LONG `valueCols` entry over the global `orderCols`

@@ -81,7 +81,15 @@ class DeterminismSpec extends SparkSpec {
       "ts_forecast_baseline_mae", "agg_basket_size_dist",
       // Round-7 thirteenth wave: survival/dormancy/balance shares
       "agg_survival_curve", "agg_dormancy_buckets",
-      "pipeline_shard_balance")) {
+      "pipeline_shard_balance",
+      // The detection family (shared box fixture, IoU pair gate and
+      // mutual-best windows) and the probe-retrieval family (shared
+      // cosine scorer, top-10 heap and rank window)
+      "eval_det_f1_at_iou", "eval_det_match", "eval_count_ccc",
+      "eval_det_ap", "eval_map_coco", "eval_det_recall_by_size",
+      "multimodal_hard_example_mining",
+      "eval_ndcg_label", "eval_mrr_label", "eval_err",
+      "eval_ap_retrieval", "eval_ndcg_curve")) {
       val a = rows(q, "3")
       val b = rows(q, "17")
       assert(a == b, s"$q diverged between 3 and 17 shuffle partitions " +
