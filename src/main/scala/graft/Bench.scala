@@ -13,15 +13,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureCheckpointDir(spark)
-    graft.plans.TopKPushdown.install(spark)
+    val spark = GraftSession.harness()
     // Warm the session (executor threads, codegen compiler, parquet
     // footer caches) so the first measured query isn't startup noise.
     spark.range(1000000).selectExpr("sum(id)").collect()

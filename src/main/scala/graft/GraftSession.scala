@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level plumbing shared by the harness entry points (Verify,
-  * Bench) and available to library users.
+/** Session-level plumbing shared by the harness entry points (Bench,
+  * Verify, ScaleStress, Dev, the test suites) and available to library
+  * users.
   *
   * `ensureCheckpointDir` makes iterative operators' RELIABLE-checkpoint
   * branch actually run: ConnectedComponents (dedup_cluster_canon) cuts
@@ -14,6 +15,27 @@ import org.apache.spark.sql.SparkSession
   * directory, removed at JVM exit.
   */
 object GraftSession {
+
+  /** The one session builder of every harness entry point:
+    * `local[cpus]` with as many shuffle partitions, UTC session time,
+    * no UI, WARN logs, a checkpoint dir and the TopKPushdown rule, so
+    * every harness plans what Bench and Verify plan. `cpus` defaults to
+    * SPARK_GRAFT_CPUS, else 4. perfbench's frozen `Harness` keeps a
+    * hand-made copy that also places its directories under its run
+    * directory. */
+  def harness(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt))
+      : SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensureCheckpointDir(spark)
+    graft.plans.TopKPushdown.install(spark)
+    spark
+  }
 
   private val cleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

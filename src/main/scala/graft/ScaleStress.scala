@@ -228,16 +228,8 @@ object ScaleStress {
     val only = args.drop(1).toSet
     val keys =
       if (only.isEmpty) SfSeriesKeys else SfSeriesKeys.filter(only)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.ensureCheckpointDir(spark)
-    graft.plans.TopKPushdown.install(spark)
+    val spark = GraftSession.harness()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val sf001 = "/root/testdata/sf0.01"

@@ -270,13 +270,13 @@ object WindowQueries {
     // PlanAuditSpec.
     // Same result as the window rank-limit idiom a user would write —
     // and that IS what this declares. The TopKPushdownRule optimizer
-    // rule (plans/TopKPushdown.scala) rewrites the Filter(rn <= 2) over
+    // rule (plans/TopKPushdown.scala), which GraftSession.harness
+    // installs in every harness session, rewrites the Filter(rn <= 2) over
     // the Window into TopKPerGroupNode, so the plan is the bounded-heap
     // two-phase operator + a re-window over ≤ 2 rows per group (no extra
     // exchange or sort — the operator passes both through). Plan pinned
     // in PlanAuditSpec; rule unit-tested in TopKPushdownSpec.
     "topk_pushdown_rank" -> ((s, dir) => {
-      graft.plans.TopKPushdown.install(s)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id"))
       events(s, dir)

@@ -10,6 +10,16 @@ import graft.plans.GlobalRank
   */
 class GlobalRankSpec extends SparkSpec {
 
+  /** GlobalRank range-exchanges into spark.sql.shuffle.partitions
+    * partitions; run `body` at `n` of them, then restore the session's
+    * setting. */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, saved)
+  }
+
   test("two-pass percent_rank/cume_dist == window form on orders") {
     val orders = Tables.t(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -18,9 +28,11 @@ class GlobalRankSpec extends SparkSpec {
       .select(col("o_orderkey"),
         percent_rank().over(w).as("pr"), cume_dist().over(w).as("cd"))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val twoPass = GlobalRank.percentCume(orders, "o_totalprice", numPartitions = 7)
-      .select(col("o_orderkey"), col("pr"), col("cd"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val twoPass = withShufflePartitions(7) {
+      GlobalRank.percentCume(orders, "o_totalprice")
+        .select(col("o_orderkey"), col("pr"), col("cd"))
+        .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    }
     assert(twoPass.size == windowed.size)
     val bad = windowed.collect {
       case (k, v) if twoPass(k) != v => (k, v, twoPass(k))
@@ -34,7 +46,7 @@ class GlobalRankSpec extends SparkSpec {
     // partitions — every tie group must still get one (pr, cd) pair.
     val df = spark.range(1000)
       .select(col("id"), (col("id") % 5).cast("double").as("k"))
-    val got = GlobalRank.percentCume(df, "k", numPartitions = 13)
+    val got = withShufflePartitions(13)(GlobalRank.percentCume(df, "k"))
     val perKey = got.groupBy("k")
       .agg(countDistinct(col("pr")).as("nPr"), countDistinct(col("cd")).as("nCd"),
         count(lit(1)).as("n"))
@@ -55,7 +67,7 @@ class GlobalRankSpec extends SparkSpec {
     // (ArrayType keys deserialize to Seq, whose == is already by value).
     val df = spark.range(100)
       .select(col("id"), expr("cast(cast(id % 4 AS STRING) AS BINARY)").as("k"))
-    val got = GlobalRank.percentCume(df, "k", numPartitions = 5)
+    val got = withShufflePartitions(5)(GlobalRank.percentCume(df, "k"))
     val perKey = got.selectExpr("cast(k AS STRING) AS k0", "pr", "cd")
       .groupBy("k0")
       .agg(countDistinct(col("pr")).as("nPr"), countDistinct(col("cd")).as("nCd"))
@@ -76,10 +88,11 @@ class GlobalRankSpec extends SparkSpec {
     val windowed = docs.select(col("doc_id"), sum(col("n")).over(w).as("cum"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (parts <- Seq(1, 7, 32)) {
-      val twoPass = GlobalRank
-        .runningSum(docs, Seq("skey", "doc_id"), "n", "cum", numPartitions = parts)
-        .select(col("doc_id"), col("cum"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val twoPass = withShufflePartitions(parts) {
+        GlobalRank.runningSum(docs, Seq("skey", "doc_id"), "n", "cum")
+          .select(col("doc_id"), col("cum"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(twoPass == windowed, s"prefix sums diverge at $parts partitions")
     }
   }
@@ -96,11 +109,11 @@ class GlobalRankSpec extends SparkSpec {
         coalesce(max(col("n")).over(w), lit(Long.MinValue)).as("pm"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (parts <- Seq(1, 7, 32)) {
-      val twoPass = GlobalRank
-        .runningMaxExclusive(docs, Seq("skey", "doc_id"), "n", "pm",
-          numPartitions = parts)
-        .select(col("doc_id"), col("pm"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val twoPass = withShufflePartitions(parts) {
+        GlobalRank.runningMaxExclusive(docs, Seq("skey", "doc_id"), "n", "pm")
+          .select(col("doc_id"), col("pm"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(twoPass == windowed, s"prefix maxes diverge at $parts partitions")
     }
   }
@@ -117,12 +130,37 @@ class GlobalRankSpec extends SparkSpec {
         sum(col("n")).over(w).as("cn"), sum(col("m")).over(w).as("cm"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     for (parts <- Seq(1, 7, 32)) {
-      val twoPass = GlobalRank
-        .runningSums(docs, Seq("skey", "doc_id"), Seq("n", "m"),
-          Seq("cn", "cm"), numPartitions = parts)
-        .select(col("doc_id"), col("cn"), col("cm"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val twoPass = withShufflePartitions(parts) {
+        GlobalRank.runningSums(docs, Seq("skey", "doc_id"), Seq("n", "m"),
+          Seq("cn", "cm"))
+          .select(col("doc_id"), col("cn"), col("cm"))
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      }
       assert(twoPass == windowed, s"multi prefix sums diverge at $parts partitions")
+    }
+  }
+
+  test("dropping the persisted ranged blocks recomputes the same rows") {
+    val orders = Tables.t(spark, sf, "orders")
+      .select(col("o_orderkey"), col("o_totalprice"))
+    val docs = Tables.t(spark, sf, "documents")
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n"),
+        col("n_chars").cast("long").as("m"),
+        md5(col("doc_id").cast("string").cast("binary")).as("skey"))
+    def build() = Seq(
+      GlobalRank.percentCume(orders, "o_totalprice"),
+      GlobalRank.runningSums(docs, Seq("skey", "doc_id"), Seq("n", "m"),
+        Seq("cn", "cm")))
+    def rows(dfs: Seq[org.apache.spark.sql.DataFrame]) =
+      dfs.map(_.collect().map(_.toString).sorted.toSeq)
+    withShufflePartitions(7) {
+      val undisturbed = rows(build())
+      val disturbed = build()
+      assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+      GraftSession.dropLeftoverBlocks(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(rows(disturbed) == undisturbed)
     }
   }
 

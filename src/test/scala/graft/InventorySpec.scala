@@ -859,4 +859,20 @@ class InventorySpec extends SparkSpec {
       s"uncast percentile_disc drift — found $found, pinned $whitelist " +
         "(cast the Spark side AS BIGINT per SURVEY §1.3, or amend)")
   }
+
+  // One session builder: Bench, Verify, ScaleStress, Dev and SparkSpec
+  // all start their session through GraftSession.harness, so no entry
+  // point can drift from the session Bench and Verify run on.
+  test("SparkSession.builder appears under src/main only in GraftSession") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8).contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSeq.sorted
+    assert(hits == Seq("GraftSession.scala"),
+      s"SparkSession.builder outside GraftSession: $hits " +
+        "(start the session with GraftSession.harness)")
+  }
 }

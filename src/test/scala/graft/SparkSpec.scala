@@ -5,22 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkSpec {
   /** The live shared session, or a new one (with a new SparkContext) if
-    * a suite stopped the last one. */
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.ensureCheckpointDir(s)
-    s
-  }
+    * a suite stopped the last one. The harness session itself, at an
+    * explicit 4 cores whatever SPARK_GRAFT_CPUS says, so tests plan what
+    * Bench and Verify ship, TopKPushdown included, in any suite order. */
+  def session(): SparkSession = GraftSession.harness(4)
 }
 
-/** Shared session for all suites (one JVM under Test/fork). Mirrors the
-  * harness entry points (Verify/Bench) incl. the checkpoint dir, so the
+/** Shared session for all suites (one JVM under Test/fork), built by the
+  * harness entry points' own builder, incl. the checkpoint dir, so the
   * reliable-checkpoint branch of iterative operators is what tests
   * exercise. */
 trait SparkSpec extends AnyFunSuite {

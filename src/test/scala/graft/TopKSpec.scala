@@ -44,8 +44,8 @@ class TopKSpec extends SparkSpec {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_orderkey"))
         .orderBy(col("o_totalprice").desc, col("o_custkey"))
-      // Keep the baseline a genuine window plan even if another suite
-      // installed the TopKPushdownRule on this shared session.
+      // Keep the baseline a genuine window plan: the shared session
+      // installs the TopKPushdownRule.
       spark.conf.set("spark.graft.topk.pushdown.enabled", "false")
       val expected = try o.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 2).drop("rn")
