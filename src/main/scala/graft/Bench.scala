@@ -85,10 +85,10 @@ object Bench {
     // a committed artifact every round even though the driver's bounded
     // stdout tail truncates ~30 of the ~108 entries. Full runs (no
     // SPARK_GRAFT_BENCH_ONLY subset) never land in the tracked file
-    // under a subset run's numbers because subsets redirect to scratch.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      new java.io.File(
-        if (only.isEmpty) "BENCH_FULL.json" else "BENCH_LOCAL.json").getAbsolutePath)
+    // under a subset run's numbers because subsets write the untracked
+    // BENCH_LOCAL.json.
+    val out = new java.io.File(
+      if (only.isEmpty) "BENCH_FULL.json" else "BENCH_LOCAL.json").getAbsolutePath
     // A swallowed write failure would leave a STALE committed artifact
     // that the tail line then points at as authoritative — log it and
     // flag it in the tail JSON so staleness is detectable.

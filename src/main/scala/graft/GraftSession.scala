@@ -18,11 +18,12 @@ object GraftSession {
 
   /** The one session builder of every harness entry point:
     * `local[cpus]` with as many shuffle partitions, UTC session time,
-    * no UI, WARN logs, a checkpoint dir and the TopKPushdown rule, so
-    * every harness plans what Bench and Verify plan. `cpus` defaults to
-    * SPARK_GRAFT_CPUS, else 4. perfbench's frozen `Harness` keeps a
-    * hand-made copy that also places its directories under its run
-    * directory. */
+    * no UI, a checkpoint dir and the TopKPushdown rule, so every
+    * harness plans what Bench and Verify plan. `cpus` defaults to
+    * SPARK_GRAFT_CPUS, else 4. Logs are at WARN from JVM start-up on:
+    * `src/main/resources/log4j2.properties` sets the level before the
+    * context starts. perfbench's frozen `Harness` keeps a hand-made
+    * copy that also places its directories under its run directory. */
   def harness(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt))
       : SparkSession = {
     val spark = SparkSession.builder()
@@ -31,7 +32,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     ensureCheckpointDir(spark)
     graft.plans.TopKPushdown.install(spark)
     spark

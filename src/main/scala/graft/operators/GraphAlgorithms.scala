@@ -5,28 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** Shared distributed-iteration loops behind the §2 graph keys — the
   * public, parameterized faces of `graph_bfs_distance`,
-  * `graph_pagerank` and `graph_kcore` (which stay FIXED-ROUND by
-  * contract so their unrolled DuckDB oracles mirror exactly; callers
-  * who want convergence use these directly).
+  * `graph_pagerank`, `graph_kcore` and `graph_label_prop`. Every loop
+  * runs a FIXED number of rounds, so the keys' unrolled DuckDB oracles
+  * mirror them exactly.
   *
-  * All three run under the ConnectedComponents materialization
-  * discipline: per-round eager checkpoint (lineage truncation — the
-  * alternative single lazy plan re-scans the base relation once per
-  * round with zero exchange reuse, measured in BASELINE.md), previous
-  * round's blocks released as soon as the next is materialized, so
-  * executor state is one iterate copy + any persisted edge cache
-  * regardless of round count. Driver state per round is ONE long (the
-  * convergence/frontier count) — never a row collection.
-  *
-  * BFS is FRONTIER-DELTA (the round-7 verdict's improvement over full
-  * re-aggregation): each round joins edges against only the rows whose
-  * distance changed last round, then min-merges the newly discovered
-  * nodes into the state. In level-synchronous unweighted BFS a node's
-  * distance never improves after first discovery, so the delta is
-  * exactly the new frontier and the merge is a strict union — on a
-  * large-diameter 100 TB graph round k shuffles O(|frontier_k| ⋈ E)
-  * instead of O(|V| ⋈ E), the difference between a long-tail BFS
-  * finishing and not.
+  * All four run through one private loop, `iterate`, under the
+  * ConnectedComponents materialization discipline: eager checkpoint
+  * every `perMaterialize` rounds (lineage truncation — the alternative
+  * single lazy plan re-scans the base relation once per round with
+  * zero exchange reuse, measured in BASELINE.md), previous state's
+  * blocks released as soon as the next is materialized, so executor
+  * state is one iterate copy + any persisted edge cache regardless of
+  * round count. The loop runs no action besides its checkpoints.
   */
 object GraphAlgorithms {
 
@@ -43,100 +33,57 @@ object GraphAlgorithms {
   private def release(df: DataFrame): Unit =
     org.apache.spark.sql.graftshim.unpersistCheckpoint(df)
 
+  /** The one fixed-round loop: materialize `init`, then apply `step`
+    * `rounds` times, `perMaterialize` steps per eager checkpoint,
+    * releasing each superseded state. Batching is only sound for a
+    * step that reads its input ONCE (a linear plan — no subtree
+    * duplication, no recompute); a step that reads it twice runs at
+    * `perMaterialize` = 1. This is the one place that decides the
+    * loops' batching and checkpoint policy. */
+  private def iterate(s: SparkSession, init: DataFrame, rounds: Int,
+      perMaterialize: Int)(step: DataFrame => DataFrame): DataFrame = {
+    var state = materialize(s, init)
+    var done = 0
+    while (done < rounds) {
+      val k = math.min(perMaterialize, rounds - done)
+      val next = materialize(s, (1 to k).foldLeft(state)((d, _) => step(d)))
+      release(state)
+      state = next
+      done += k
+    }
+    state
+  }
+
   /** Multi-source BFS over directed `edges` (`src`, `dst`) from
     * `seeds` (`node`), full-re-aggregation form: each round relaxes
     * the ENTIRE distance table (one edge⋈state join + one min agg).
-    * On a dense small-diameter graph — the fixture co-purchase graph,
-    * where the frontier reaches most nodes by round 2 — this is the
-    * CHEAPER form: one aggregation per round, no frontier bookkeeping
-    * (measured: the delta form's extra merge + count actions cost
-    * ~25% here, BASELINE.md round-8 anchor). [[bfsFrontierDelta]] is
-    * the long-diameter/100 TB shape; GraphAlgorithmsSpec pins the two
-    * equal round-for-round. */
+    * On the dense small-diameter fixture co-purchase graph, where the
+    * frontier reaches most nodes by round 2, this beat a frontier-delta
+    * form (BASELINE.md round-8 A/B: 4.06 s vs 4.56 s). Unreached nodes
+    * are absent. The step reads its state twice (join + union), so one
+    * round per checkpoint. */
   def bfsFullReagg(s: SparkSession, edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var dist = materialize(s, seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    for (_ <- 1 to rounds) {
-      val next = materialize(s, edges
+    iterate(s, seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)), rounds, perMaterialize = 1) { dist =>
+      edges
         .join(dist, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
         .unionByName(dist)
-        .groupBy("node").agg(min(col("dist")).as("dist")))
-      release(dist)
-      dist = next
+        .groupBy("node").agg(min(col("dist")).as("dist"))
     }
-    dist
-  }
-
-  /** Multi-source BFS, FRONTIER-DELTA form (see object scaladoc).
-    * Runs at most `maxRounds` relaxation rounds, stopping EARLY when a
-    * round discovers nothing (an empty frontier means every later
-    * round is a no-op, so "3 rounds" and "stopped at 2" are the same
-    * table). Returns (distances `node`, `dist`; unreached nodes absent
-    * by contract, and `roundsRun`). Prefer this over
-    * [[bfsFullReagg]] whenever |frontier| ≪ |reached|: the per-round
-    * cost follows the frontier, not the accumulated state.
-    */
-  def bfsFrontierDelta(s: SparkSession, edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int): (DataFrame, Int) = {
-    require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    var dist = materialize(s, seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    // The delta IS the state in round 1 — every seed is newly found.
-    var delta = dist
-    var rounds = 0
-    var frontier = delta.count()
-    while (rounds < maxRounds && frontier > 0) {
-      // Candidates: one hop out of the delta only. The per-key min
-      // collapses duplicate discoveries inside the frontier expansion
-      // before the state join (partial agg — only distinct candidate
-      // nodes cross the exchange).
-      val cand = edges
-        .join(delta.withColumnRenamed("dist", "fd").withColumnRenamed("node", "fn"),
-          col("src") === col("fn"))
-        .select(col("dst").as("node"), (col("fd") + 1).as("cdist"))
-        .groupBy("node").agg(min(col("cdist")).as("cdist"))
-      // Newly discovered = candidates absent from (or — defensively,
-      // for non-BFS edge weights a caller might graft on — better
-      // than) the state.
-      val next = materialize(s, cand.join(dist, Seq("node"), "left_outer")
-        .filter(col("dist").isNull || col("cdist") < col("dist"))
-        .select(col("node"), col("cdist").as("dist")))
-      frontier = next.count()
-      if (frontier > 0) {
-        val merged = materialize(s,
-          dist.unionByName(next).groupBy("node")
-            .agg(min(col("dist")).as("dist")))
-        if (!(delta eq dist)) release(delta)
-        release(dist)
-        dist = merged
-        delta = next
-      } else release(next)
-      rounds += 1
-    }
-    // The last productive round's delta is no longer needed once the
-    // loop exits (the state table is the result) — releasing it here
-    // keeps the "one iterate copy" promise for callers that invoke
-    // this repeatedly. On a zero-round exit delta IS dist; keep it.
-    if (!(delta eq dist)) release(delta)
-    (dist, rounds)
   }
 
   /** Integer-arithmetic PageRank (scaled longs, 1.0 ≡ 1,000,000;
     * damping 0.85 as `150000 + 85·Σ(rank div deg) div 100` — the
     * graph_pagerank update, bit-replayable in both engines). Runs
-    * `iters` supersteps, or with `untilFixpoint` stops as soon as a
-    * superstep changes NO rank (exact long equality — the reason the
-    * ranks are integers; a float fixpoint test needs an epsilon that
-    * any reducer reorder can cross). Every node needs out-degree ≥ 1
-    * (the callers' bipartite both-directions construction guarantees
-    * it); dangling nodes would leak rank mass silently.
-    * Returns (ranks `node`, `rank`, supersteps actually run).
+    * `iters` supersteps. Every node needs out-degree ≥ 1 (the callers'
+    * bipartite both-directions construction guarantees it); dangling
+    * nodes would leak rank mass silently. Returns ranks (`node`,
+    * `rank`).
     */
-  def pageRank(s: SparkSession, edges: DataFrame, iters: Int,
-      untilFixpoint: Boolean = false): (DataFrame, Int) = {
+  def pageRank(s: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // Round-17: the edge cache is hash-partitioned AND sorted on the
@@ -149,84 +96,32 @@ object GraphAlgorithms {
     val ed = edges.join(deg, Seq("src"))
       .repartition(col("src")).sortWithinPartitions("src")
       .persist()
-    var ranks = materialize(s, deg.select(col("src").as("node"),
-      lit(1000000L).as("rank")))
-    var rounds = 0
-    var converged = false
-    // One superstep as a pure plan transform: the update references its
-    // input exactly ONCE (join → partial agg → project), so chaining k
-    // steps before a materialize is a LINEAR plan — no subtree
-    // duplication, no recompute.
-    def step(r: DataFrame): DataFrame = ed
-      .join(r, col("src") === col("node"))
-      .select(col("dst"), expr("rank div deg").as("c"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      .select(col("dst").as("node"),
-        (lit(150000L) + expr("85 * sc div 100")).as("rank"))
-    if (!untilFixpoint) {
-      // Round-18 (round-17 verdict #1 "fewer actions per round"): the
-      // FIXED-ROUND face batches TWO supersteps per eager checkpoint —
-      // half the checkpoint writes, read-backs and job launches, whose
-      // fixed cost (not data) dominated the loop at fixture scale.
-      // Identical integer arithmetic, so the final table is
-      // bit-identical; the fixpoint face below keeps one materialize
-      // per round because the moved-count must observe every round.
-      while (rounds < iters) {
-        val k = math.min(2, iters - rounds)
-        val next = materialize(s, (1 to k).foldLeft(ranks)((r, _) => step(r)))
-        release(ranks)
-        ranks = next
-        rounds += k
-      }
-      ed.unpersist()
-      return (ranks, rounds)
-    }
-    while (rounds < iters && !converged) {
-      val next = materialize(s, step(ranks))
-      if (untilFixpoint) {
-        // One long to the driver: count of moved ranks. The node SET
-        // is stable after round 1 (every node has in-degree ≥ 1 in
-        // the both-directions construction), so an inner join reads
-        // every pair.
-        val moved = next.withColumnRenamed("rank", "r2")
-          .join(ranks, Seq("node"))
-          .filter(col("r2") =!= col("rank")).count()
-        converged = moved == 0L
-      }
-      release(ranks)
-      ranks = next
-      rounds += 1
+    // Round-18: the superstep references its input exactly ONCE
+    // (join → partial agg → project), so TWO supersteps share one
+    // eager checkpoint — half the checkpoint writes, read-backs and
+    // job launches, whose fixed cost (not data) dominated the loop at
+    // fixture scale. Identical integer arithmetic, bit-identical ranks.
+    val ranks = iterate(s, deg.select(col("src").as("node"),
+        lit(1000000L).as("rank")), iters, perMaterialize = 2) { r =>
+      ed.join(r, col("src") === col("node"))
+        .select(col("dst"), expr("rank div deg").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
+        .select(col("dst").as("node"),
+          (lit(150000L) + expr("85 * sc div 100")).as("rank"))
     }
     ed.unpersist()
-    (ranks, rounds)
+    ranks
   }
 
-  /** k-core peel over undirected oriented edges (`a`, `b`): drop
-    * nodes with (sampled) degree < k and the edges they carry, at most
-    * `maxRounds` times; with `untilFixpoint` keeps peeling until a
-    * round removes nothing — the true k-core, whose every node has
-    * degree ≥ k BY the fixpoint test itself. The fixed-round declared
-    * key is always a SUPERSET of this fixpoint (peeling is monotone:
-    * rounds only remove). Survivor prunes broadcast (|V|-row node
-    * lists; swap to a bloom prefilter where survivors outgrow the
-    * broadcast threshold). Returns (surviving edges, rounds run).
-    */
   /** Synchronous LABEL PROPAGATION over undirected (a, b) edges:
     * every node starts as its own label; each superstep every node
     * adopts the most frequent label among its NEIGHBORS, ties broken
     * by the MINIMUM label — fully deterministic (the async/random
     * variants of LPA are not replayable; the sync+min-tie-break form
     * is, at the cost of possible 2-cycles on bipartite structures,
-    * which is why the declared key runs a FIXED round count and the
-    * fixpoint variant carries a maxRounds cap instead of trusting
-    * convergence). Same per-round materialize/release discipline as
-    * the other loops: state is one (node, label) iterate.
-    *
-    * Returns (labels(v, label), roundsRun). With `untilFixpoint`,
-    * stops early once a round changes no label (one long-count per
-    * round, the kcorePeel convention). */
-  def labelPropagation(s: SparkSession, edges: DataFrame, rounds: Int,
-      untilFixpoint: Boolean = false): (DataFrame, Int) = {
+    * which is why it runs a FIXED round count). Returns labels
+    * (`v`, `label`). */
+  def labelPropagation(s: SparkSession, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1)
     // Round-17: neighbor table pre-partitioned + sorted on the join key
     // (the labels side joins on "n" every round) — same one-exchange-
@@ -235,10 +130,6 @@ object GraphAlgorithms {
       .unionAll(edges.select(col("b").as("v"), col("a").as("n")))
       .repartition(col("n")).sortWithinPartitions("n")
       .persist()
-    var labels = materialize(s,
-      nb.select(col("v")).distinct().select(col("v"), col("v").as("label")))
-    var r = 0
-    var stable = false
     // Round-17: the most-frequent-min-tie-break label is an ARGMAX —
     // max_by over the total order (c, -label) picks highest count,
     // then lowest label, exactly row_number()=1 under
@@ -247,64 +138,42 @@ object GraphAlgorithms {
     // per-partition window SORT disappears. (c, -label) is unique
     // within each v group (labels are distinct rows), so the argmax
     // is deterministic; labels are non-negative node ids, so -label
-    // cannot overflow.
-    def step(l: DataFrame): DataFrame =
+    // cannot overflow. Round-18: the step is linear in its input (one
+    // join, two aggs), so two supersteps share one checkpoint, as in
+    // pageRank.
+    val labels = iterate(s,
+        nb.select(col("v")).distinct().select(col("v"), col("v").as("label")),
+        rounds, perMaterialize = 2) { l =>
       nb.join(l.withColumnRenamed("v", "n"), Seq("n"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(max_by(col("label"), struct(col("c"), -col("label")))
           .as("label"))
-    if (!untilFixpoint) {
-      // Round-18 (verdict #1): the fixed-round face batches TWO
-      // supersteps per eager checkpoint — the step is a linear plan in
-      // its input (one join, two aggs), so fusing two halves the
-      // checkpoint/job fixed cost without any recompute. Bit-identical
-      // labels; the fixpoint face needs per-round state, unchanged.
-      while (r < rounds) {
-        val k = math.min(2, rounds - r)
-        val next = materialize(s, (1 to k).foldLeft(labels)((l, _) => step(l)))
-        release(labels)
-        labels = next
-        r += k
-      }
-      nb.unpersist()
-      return (labels, r)
-    }
-    while (r < rounds && !stable) {
-      val next = materialize(s, step(labels))
-      if (untilFixpoint)
-        stable = next.join(labels, Seq("v", "label"), "left_anti")
-          .isEmpty
-      release(labels)
-      labels = next
-      r += 1
     }
     nb.unpersist()
-    (labels, r)
+    labels
   }
 
-  def kcorePeel(s: SparkSession, edges: DataFrame, k: Int, maxRounds: Int,
-      untilFixpoint: Boolean = false): (DataFrame, Int) = {
-    require(k >= 1 && maxRounds >= 1)
-    var e = materialize(s, edges)
-    var rounds = 0
-    var stable = false
-    while (rounds < maxRounds && !stable) {
-      val before = if (untilFixpoint) e.count() else -1L
+  /** k-core peel over undirected oriented edges (`a`, `b`): drop
+    * nodes with (sampled) degree < k and the edges they carry,
+    * `rounds` times. Peeling is monotone (rounds only remove), so the
+    * result is a SUPERSET of the true k-core, equal to it once a round
+    * removes nothing. Survivor prunes broadcast (|V|-row node lists;
+    * swap to a bloom prefilter where survivors outgrow the broadcast
+    * threshold). The step reads its edge set twice (degree agg +
+    * prune), so one round per checkpoint. Returns surviving edges.
+    */
+  def kcorePeel(s: SparkSession, edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    require(k >= 1 && rounds >= 1)
+    iterate(s, edges, rounds, perMaterialize = 1) { e =>
       val keep = e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("node")
-      val next = materialize(s, e
-        .join(broadcast(keep.withColumnRenamed("node", "a")),
+      e.join(broadcast(keep.withColumnRenamed("node", "a")),
           Seq("a"), "left_semi")
         .join(broadcast(keep.withColumnRenamed("node", "b")),
           Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-      if (untilFixpoint) stable = next.count() == before
-      release(e)
-      e = next
-      rounds += 1
+        .select(col("a"), col("b"))
     }
-    (e, rounds)
   }
 }

@@ -165,6 +165,36 @@ object GraphQueries {
       .repartition(col("src")).sortWithinPartitions("src")
       .persist()
 
+  /** The composite-key (seed, node) BFS behind graph_closeness and
+    * graph_eccentricity: every hashSeeds seed runs in ONE
+    * BfsRounds-round loop over the full both-direction edge cache. Per
+    * round, one equi-join expands last round's frontier (dist = r − 1)
+    * and one (seed, node)-keyed min reduce merges it — bfsFullReagg's
+    * plan with the seed column riding along (one loop per seed would
+    * pay 3·|seeds| joins). Each round localCheckpoints eagerly
+    * and releases the round it supersedes, so one state copy stays
+    * pinned. Returns the (seed, node, dist) rows with dist > 0; the
+    * edge cache is already unpersisted (the result reads only the
+    * checkpointed state). */
+  private def seedDistances(s: SparkSession, dir: String): DataFrame = {
+    val ed = bothDirEdgeCache(s, dir, None)
+    var dist = hashSeeds(s, dir).select(col("node").as("seed"),
+      col("node"), lit(0L).as("dist")).localCheckpoint(true)
+    for (r <- 1 to BfsRounds) {
+      val nxt = dist.filter(col("dist") === (r - 1).toLong)
+        .join(ed, col("node") === col("src"))
+        .select(col("seed"), col("dst").as("node"),
+          lit(r.toLong).as("dist"))
+      val next = dist.unionAll(nxt)
+        .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
+        .localCheckpoint(true)
+      org.apache.spark.sql.graftshim.unpersistCheckpoint(dist)
+      dist = next
+    }
+    ed.unpersist()
+    dist.filter(col("dist") > 0)
+  }
+
   /** The deduplicated co-purchase edges (a < b) labeled with both
     * endpoints' brands: (b, a, ba, bb), two broadcast label joins.
     * Shared by the brand conductance/modularity/cross-brand keys. */
@@ -232,9 +262,7 @@ object GraphQueries {
       // (src, dst, deg) copy serves every superstep; per-superstep
       // checkpoint truncates lineage so iteration N's plan is one join
       // + one agg, never a replay of rounds 1..N−1). Fixed 5 rounds
-      // here — the unrolled-oracle contract; the convergence read is
-      // the public untilFixpoint face, pinned ≡ this prefix in
-      // GraphAlgorithmsSpec.
+      // here — the unrolled-oracle contract.
       val pairs = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey")).distinct()
       val edges = pairs
@@ -242,7 +270,7 @@ object GraphQueries {
           (col("l_suppkey") * 2 + 1).as("dst"))
         .unionAll(pairs.select((col("l_suppkey") * 2 + 1).as("src"),
           (col("l_partkey") * 2).as("dst")))
-      GraphAlgorithms.pageRank(s, edges, Iters)._1.orderBy("node")
+      GraphAlgorithms.pageRank(s, edges, Iters).orderBy("node")
     }),
 
     // TRIANGLE COUNTING over a hash-sparsified co-occurrence graph —
@@ -316,12 +344,9 @@ object GraphQueries {
     "graph_bfs_distance" -> ((s, dir) => {
       // Delegates to GraphAlgorithms.bfsFullReagg — on this DENSE
       // co-purchase graph (diameter ~2-3 from the mod-97 seeds) the
-      // one-agg-per-round form is the cheaper one; the round-8
-      // FRONTIER-DELTA variant (bfsFrontierDelta — round k shuffles
-      // O(|frontier_k| ⋈ E), the shape that survives a large-diameter
-      // 100 TB graph) is the public scale path, pinned ≡ this form in
-      // GraphAlgorithmsSpec. Fixed 3 rounds — the unrolled-oracle
-      // contract.
+      // one-agg-per-round form is the cheaper one (it beat a
+      // frontier-delta form in the round-8 A/B, BASELINE.md). Fixed 3
+      // rounds — the unrolled-oracle contract.
       // Round-18: one-pass both-direction edge cache (see
       // bothDirEdgeCache) — drops the round-13 localCheckpoint +
       // direction-union (one materialization fewer; the constraint
@@ -338,41 +363,19 @@ object GraphQueries {
     // HARMONIC CENTRALITY, 3-HOP (§2.87) — per-seed Σ 1/d(s,v) over
     // the BFS ball (the closeness variant that handles disconnected
     // graphs; truncated at the same 3 rounds as graph_bfs_distance —
-    // the unrolled-oracle contract). The BFS state carries a
-    // COMPOSITE (seed, node) key so all SeedBudget seeds run in ONE
-    // 3-round loop — per round one equi-join frontier expansion + one
-    // (seed, node)-keyed min reduce, exactly bfsFullReagg's plan with
-    // the seed column riding along (a per-seed driver loop would pay
-    // 3·|seeds| joins). Same eager-materialization discipline as the
-    // other fixed-round graph keys. Exactness: distances are 1..3,
-    // so 1/d in SIXTHS (6 div d ∈ {6,3,2}) is an exact integer sum;
-    // one division at the edge.
-    "graph_closeness" -> ((s, dir) => {
-      // Round-18: one-pass both-direction edge cache (bothDirEdgeCache)
-      // replaces the localCheckpoint + direction-union build.
-      val ed = bothDirEdgeCache(s, dir, None)
-      val seeds = hashSeeds(s, dir)
-      var dist = seeds.select(col("node").as("seed"), col("node"),
-        lit(0L).as("dist")).localCheckpoint(true)
-      for (r <- 1 to BfsRounds) {
-        val nxt = dist.filter(col("dist") === (r - 1).toLong)
-          .join(ed, col("node") === col("src"))
-          .select(col("seed"), col("dst").as("node"),
-            lit(r.toLong).as("dist"))
-        dist = dist.unionAll(nxt)
-          .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      val res = dist.filter(col("dist") > 0)
+    // the unrolled-oracle contract). The distances come from
+    // seedDistances, the composite-key (seed, node) BFS that runs all
+    // SeedBudget seeds in ONE 3-round loop. Exactness: distances are
+    // 1..3, so 1/d in SIXTHS (6 div d ∈ {6,3,2}) is an exact integer
+    // sum; one division at the edge.
+    "graph_closeness" -> ((s, dir) =>
+      seedDistances(s, dir)
         .groupBy("seed")
         .agg(count(lit(1)).as("n_reached"),
           sum(expr("6 div dist")).as("h6"))
         .select(col("seed"), col("n_reached"),
           r4d(col("h6").cast("double") / lit(6.0)).as("harmonic_3hop"))
-        .orderBy("seed")
-      ed.unpersist()
-      res
-    }),
+        .orderBy("seed")),
 
     // BIPARTITE DEGREE PROFILE (§2.120) — the ORIGINAL order↔part
     // incidence graph's two-sided shape (everything else projects it
@@ -414,26 +417,11 @@ object GraphQueries {
     // seed: how many nodes sit at EXACTLY hop 1 / 2 / 3, and the
     // truncated eccentricity (the deepest occupied hop ≤ 3) — the
     // ball-growth curve next to graph_closeness's harmonic compress
-    // (same seeds, same full-edge composite-key BFS; a seed's curve
+    // (same seeds, same seedDistances BFS; a seed's curve
     // says hub-vs-periphery the single harmonic number hides). Exact
     // integer conditional counts off the same unrolled rounds.
-    "graph_eccentricity" -> ((s, dir) => {
-      // Round-18: one-pass both-direction edge cache (bothDirEdgeCache)
-      // replaces the localCheckpoint + direction-union build.
-      val ed = bothDirEdgeCache(s, dir, None)
-      val seeds = hashSeeds(s, dir)
-      var dist = seeds.select(col("node").as("seed"), col("node"),
-        lit(0L).as("dist")).localCheckpoint(true)
-      for (r <- 1 to BfsRounds) {
-        val nxt = dist.filter(col("dist") === (r - 1).toLong)
-          .join(ed, col("node") === col("src"))
-          .select(col("seed"), col("dst").as("node"),
-            lit(r.toLong).as("dist"))
-        dist = dist.unionAll(nxt)
-          .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      val res = dist.filter(col("dist") > 0)
+    "graph_eccentricity" -> ((s, dir) =>
+      seedDistances(s, dir)
         .groupBy("seed")
         .agg(sum(when(col("dist") === 1, 1L).otherwise(0L))
             .cast("long").as("n_hop1"),
@@ -442,15 +430,12 @@ object GraphQueries {
           sum(when(col("dist") === 3, 1L).otherwise(0L))
             .cast("long").as("n_hop3"),
           max(col("dist")).as("ecc3"))
-        .orderBy("seed")
-      ed.unpersist()
-      res
-    }),
+        .orderBy("seed")),
 
     // SEED-SAMPLED TRUNCATED BRANDES BETWEENNESS (§2.108) — the one
     // classic centrality missing next to pagerank/closeness/kcore:
     // which nodes sit ON the short paths between others? Brandes over
-    // all SeedBudget seeds at once via graph_closeness's composite-key
+    // all SeedBudget seeds at once via seedDistances' composite-key
     // (seed, node) BFS — extended to carry σ, the EXACT INTEGER count
     // of shortest paths (σ(w) = Σ σ over depth-(d−1) predecessors;
     // frontier rows join edges once per round, new nodes enter by
@@ -1340,12 +1325,11 @@ object GraphQueries {
     // state is one |E| copy regardless of rounds.
     "graph_kcore" -> ((s, dir) => {
       // Peel loop shared with GraphAlgorithms.kcorePeel; fixed 5
-      // rounds here (unrolled-oracle contract) — the true-fixpoint
-      // read is the public untilFixpoint face, pinned monotone-subset
-      // of this in GraphAlgorithmsSpec.
+      // rounds here (unrolled-oracle contract), pinned ≡ the public
+      // kcorePeel in GraphAlgorithmsSpec.
       val e = GraphAlgorithms.kcorePeel(s,
         sampledOrientedEdges(s, dir, Some(Seq("0"))), k = 2,
-        maxRounds = KcoreRounds)._1
+        rounds = KcoreRounds)
       e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .orderBy("node")
@@ -1358,15 +1342,15 @@ object GraphQueries {
     // most frequent label, MIN-label tie-break — the deterministic,
     // replayable variant (async/random LPA is neither). FIXED 5
     // supersteps like PageRank/k-core, because the unrolled
-    // MATERIALIZED oracle mirrors rounds, not convergence; the
-    // fixpoint face (with its oscillation cap) is the public
-    // GraphAlgorithms.labelPropagation(untilFixpoint = true), pinned
-    // prefix-equal in GraphAlgorithmsSpec. Same '0'-prefix Doulion
+    // MATERIALIZED oracle mirrors rounds, not convergence (sync LPA
+    // can also oscillate in 2-cycles); the loop is the public
+    // GraphAlgorithms.labelPropagation, pinned ≡ this key in
+    // GraphAlgorithmsSpec. Same '0'-prefix Doulion
     // graph as k-core (the sparsified periphery makes communities
     // non-trivial); integer counts, total (node) order.
     "graph_label_prop" -> ((s, dir) => {
       val e = sampledOrientedEdges(s, dir, Some(Seq("0")))
-      GraphAlgorithms.labelPropagation(s, e, rounds = LpaRounds)._1
+      GraphAlgorithms.labelPropagation(s, e, rounds = LpaRounds)
         .select(col("v").as("node"), col("label"))
         .orderBy("node")
     }),
@@ -1425,7 +1409,7 @@ object GraphQueries {
     // aggregates with a broadcast scalar m — nothing quadratic.
     "graph_modularity" -> ((s, dir) => {
       val e = sampledOrientedEdges(s, dir, Some(Seq("0"))).persist()
-      val labels = GraphAlgorithms.labelPropagation(s, e, rounds = LpaRounds)._1
+      val labels = GraphAlgorithms.labelPropagation(s, e, rounds = LpaRounds)
       val degs = e.select(col("a").as("v"))
         .unionAll(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))

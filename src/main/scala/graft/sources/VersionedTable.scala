@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * A racing second writer's link fails (file exists, winner's bytes
   * untouched), so it re-reads the log and retries at N+1:
   * single-table optimistic concurrency, the Delta-style protocol
-  * reduced to one primitive. (No multi-table transactions, no
-  * compaction — see scaladoc on [[compactHint]].)
+  * reduced to one primitive. (No multi-table transactions;
+  * compaction is [[optimize]].)
   *
   * Scale: manifests are O(files) driver-side metadata — reading the
   * log is a few KB per commit, never a data scan; per-file min/max
@@ -512,10 +512,4 @@ object VersionedTable {
     }
     committed
   }
-
-  /** Superseded by [[optimize]] (round 11) — kept for the round-8/9
-    * docs that cite it: compaction HAS a primitive now, and it is the
-    * same shape this hint described. */
-  def compactHint: String =
-    "compact = commit(readLatest.repartitionByRange(...), op=overwrite)"
 }

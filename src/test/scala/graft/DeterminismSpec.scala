@@ -89,7 +89,10 @@ class DeterminismSpec extends SparkSpec {
       "eval_det_ap", "eval_map_coco", "eval_det_recall_by_size",
       "multimodal_hard_example_mining",
       "eval_ndcg_label", "eval_mrr_label", "eval_err",
-      "eval_ap_retrieval", "eval_ndcg_curve")) {
+      "eval_ap_retrieval", "eval_ndcg_curve",
+      // The seed BFS (seedDistances): composite-key min reduces and
+      // the harmonic sixths division behind one shared loop
+      "graph_closeness", "graph_eccentricity")) {
       val a = rows(q, "3")
       val b = rows(q, "17")
       assert(a == b, s"$q diverged between 3 and 17 shuffle partitions " +

@@ -4,68 +4,49 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.GraphAlgorithms
 
-/** The shared iteration loops behind the fixed-round §2.23 graph keys:
-  * frontier-delta BFS must equal the full-re-aggregation form it
-  * replaced, and the untilFixpoint faces of PageRank / k-core must
-  * relate to the declared fixed-round prefixes exactly as their
-  * scaladocs claim (prefix equality; monotone superset).
+/** The shared fixed-round loops behind the §2.23 graph keys: each
+  * public loop, run on the graph and round count a declared key uses,
+  * must reproduce that key's rows; and the seed BFS behind
+  * graph_closeness / graph_eccentricity must pin one state copy.
   */
 class GraphAlgorithmsSpec extends SparkSpec {
 
-  // The graph_bfs_distance graph: undirected co-purchase edges in both
-  // directions, seeds ≡ 0 mod 97.
-  private lazy val (edges, seeds) = {
+  // The co-purchase graph: distinct (a < b) part pairs bought in the
+  // same order.
+  private lazy val oriented: DataFrame = {
     val pp = Tables.t(spark, sf, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       .distinct()
-    val half = pp.as("x").join(pp.as("y"),
+    pp.as("x").join(pp.as("y"),
         col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
       .select(col("x.p").as("a"), col("y.p").as("b")).distinct()
-    val ed = half.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(half.select(col("b").as("src"), col("a").as("dst")))
-    val se = pp.select(col("p").as("node")).distinct()
-      .filter(pmod(col("node"), lit(97)) === 0)
-    (ed, se)
   }
+
+  // The '0'-prefix Doulion sample (p = 1/16) graph_kcore and
+  // graph_label_prop build.
+  private lazy val sampled: DataFrame = oriented.filter(
+    substring(md5(concat(col("a").cast("string"), lit("_"),
+      col("b").cast("string")).cast("binary")), 1, 1) === "0")
 
   private def asMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  /** The declared key's form — the reference semantics the
-    * frontier-delta variant must reproduce round-for-round. */
-  private def bfsFullReagg(rounds: Int): Map[Long, Long] =
-    asMap(GraphAlgorithms.bfsFullReagg(spark, edges, seeds, rounds))
+  private def declared(key: String): Map[Long, Long] =
+    asMap(SparkEntry.queries(key)(spark, sf))
 
-  test("frontier-delta BFS == full re-aggregation at the declared 3 rounds") {
-    val (got, rounds) = GraphAlgorithms.bfsFrontierDelta(spark, edges, seeds, 3)
-    assert(rounds <= 3)
-    assert(asMap(got) == bfsFullReagg(3))
+  test("bfsFullReagg at 3 rounds == graph_bfs_distance") {
+    // Both directions of the co-purchase graph, seeds ≡ 0 mod 97.
+    val edges = oriented.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(oriented.select(col("b").as("src"), col("a").as("dst")))
+    val seeds = Tables.t(spark, sf, "lineitem")
+      .select(col("l_partkey").as("node")).distinct()
+      .filter(pmod(col("node"), lit(97)) === 0)
+    val got = asMap(GraphAlgorithms.bfsFullReagg(spark, edges, seeds, 3))
+    assert(got == declared("graph_bfs_distance"))
+    assert(got.values.toSet.subsetOf(Set(0L, 1L, 2L, 3L)))
   }
 
-  test("frontier-delta BFS run long: early exit at the diameter, result is a fixpoint") {
-    val (got, rounds) = GraphAlgorithms.bfsFrontierDelta(spark, edges, seeds, 50)
-    // The co-purchase graph is dense (diameter ~2-3 from the mod-97
-    // seed set at every fixture SF) — the frontier must drain LONG
-    // before 50 rounds; rounds == 50 would mean early exit is broken.
-    assert(rounds < 50, s"frontier never drained: ran $rounds rounds")
-    val m = asMap(got)
-    // Fixpoint: one more full relaxation discovers nothing and
-    // improves nothing.
-    val one = edges.join(got, col("src") === col("node"))
-      .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-      .unionByName(got)
-      .groupBy("node").agg(min(col("dist")).as("dist"))
-    assert(asMap(one) == m, "a further relaxation changed the BFS fixpoint")
-    // And the declared 3-round prefix agrees wherever it has a row.
-    val three = bfsFullReagg(3)
-    three.foreach { case (n, d) =>
-      assert(m(n) == d, s"node $n: fixpoint ${m(n)} vs 3-round $d")
-    }
-  }
-
-  test("pageRank: the declared fixed-5 prefix equals the key; untilFixpoint converges and is stable") {
-    val declared = asMap(
-      SparkEntry.queries("graph_pagerank")(spark, sf))
+  test("pageRank at 5 supersteps == graph_pagerank") {
     // The bipartite graph the key builds.
     val pairs = Tables.t(spark, sf, "lineitem")
       .select(col("l_partkey"), col("l_suppkey")).distinct()
@@ -74,98 +55,54 @@ class GraphAlgorithmsSpec extends SparkSpec {
         (col("l_suppkey") * 2 + 1).as("dst"))
       .unionAll(pairs.select((col("l_suppkey") * 2 + 1).as("src"),
         (col("l_partkey") * 2).as("dst")))
-    val (five, n5) = GraphAlgorithms.pageRank(spark, bip, iters = 5)
-    assert(n5 == 5)
-    assert(asMap(five) == declared, "public fixed-5 API diverged from the declared key")
-    val (fix, n) = GraphAlgorithms.pageRank(spark, bip, iters = 80,
-      untilFixpoint = true)
-    if (n < 80) {
-      // Genuinely converged: the same number of fixed rounds — and one
-      // more — reproduce the fixpoint bit-for-bit (integer ranks; no
-      // epsilon anywhere).
-      val m = asMap(fix)
-      assert(asMap(GraphAlgorithms.pageRank(spark, bip, iters = n)._1) == m)
-      assert(asMap(GraphAlgorithms.pageRank(spark, bip, iters = n + 1)._1) == m)
-    } else {
-      // Truncating integer updates CAN settle into a period-2 cycle
-      // instead of a point — the cap is the documented behavior then.
-      assert(n == 80)
-    }
+    assert(asMap(GraphAlgorithms.pageRank(spark, bip, iters = 5))
+      == declared("graph_pagerank"))
   }
 
-  test("kcore: untilFixpoint result is a true 2-core and a subset of the fixed-5 peel") {
-    val pp = Tables.t(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .distinct()
-    val oriented = pp.as("x").join(pp.as("y"),
-        col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-      .select(col("x.p").as("a"), col("y.p").as("b")).distinct()
-    val sampled = oriented.filter(
-      substring(md5(concat(col("a").cast("string"), lit("_"),
-        col("b").cast("string")).cast("binary")), 1, 1) === "0")
-    val (five, _) = GraphAlgorithms.kcorePeel(spark, sampled, k = 2,
-      maxRounds = 5)
-    val (fix, rounds) = GraphAlgorithms.kcorePeel(spark, sampled, k = 2,
-      maxRounds = 40, untilFixpoint = true)
-    assert(rounds < 40, "2-core peel failed to reach a fixpoint in 40 rounds")
-    val fiveSet = five.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixSet = fix.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // Peeling is monotone — more rounds only remove.
-    assert(fixSet.subsetOf(fiveSet))
-    // True fixpoint: every endpoint degree in the surviving edge set
-    // is ≥ 2 (the property the fixed-round key can only approximate).
-    val deg = fix.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .agg(min(col("deg"))).collect()(0)
-    assert(fix.count() == 0 || deg.getLong(0) >= 2,
-      s"fixpoint has a degree-${deg} node")
+  test("kcorePeel at 5 rounds == graph_kcore's degrees") {
+    val peeled = GraphAlgorithms.kcorePeel(spark, sampled, k = 2, rounds = 5)
+    val deg = asMap(peeled.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("deg")))
+    assert(deg == declared("graph_kcore"))
+    // Five rounds reach the 2-core at the fixture scale: no survivor
+    // has degree below 2.
+    assert(deg.values.forall(_ >= 2))
   }
 
-  test("labelPropagation: declared fixed-5 is the fixpoint loop's 5-round prefix; fixpoint is stable") {
-    // The graph_label_prop graph: '0'-prefix Doulion sample (p=1/16)
-    // of the oriented co-purchase edges, as the key builds it.
-    val pp = Tables.t(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-      .distinct()
-    val e = pp.as("x").join(pp.as("y"),
-        col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-      .select(col("x.p").as("a"), col("y.p").as("b")).distinct()
-      .filter(substring(md5(concat(col("a").cast("string"), lit("_"),
-        col("b").cast("string")).cast("binary")), 1, 1) === "0")
-    def labelsOf(df: DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (five, r5) = GraphAlgorithms.labelPropagation(spark, e, 5)
-    assert(r5 == 5)
-    // Prefix equality: a fixpoint-capped run that happens to take ≥ 5
-    // rounds agrees with the fixed-5 run at round 5 — both loops are
-    // the same deterministic superstep, so run-to-run equality at the
-    // same round count IS the prefix property.
-    val (five2, _) = GraphAlgorithms.labelPropagation(spark, e, 5,
-      untilFixpoint = true)
-    val (fix, rFix) = GraphAlgorithms.labelPropagation(spark, e, 50,
-      untilFixpoint = true)
-    if (rFix >= 5) assert(labelsOf(five2) == labelsOf(five))
-    // Stability: one more synchronous round changes nothing (the
-    // definition of the fixpoint the early-exit claims; rFix < 50
-    // means it actually exited early rather than hitting the cap —
-    // a 2-cycle oscillation would ride to the cap).
-    assert(rFix < 50, "LPA hit the round cap: oscillating, not converged")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("v")).orderBy(col("c").desc, col("label"))
-    val nb = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-    val oneMore = nb.join(fix.withColumnRenamed("v", "n"), Seq("n"))
-      .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select(col("v"), col("label"))
-    assert(labelsOf(oneMore) == labelsOf(fix))
-    // Labels are always node ids (they originate as self-labels and
-    // only propagate), and flooding compresses: fewer labels than
-    // nodes. (On the tiny sf0.001 sample the fixpoint can legally
-    // flood to ONE community — min-label + a dense component — so
-    // no lower bound on label count is assertable.)
-    val nodes = labelsOf(fix)
-    assert(nodes.values.toSet.subsetOf(nodes.keySet))
-    assert(nodes.values.toSet.size < nodes.size)
+  test("labelPropagation at 5 rounds == graph_label_prop") {
+    val labels = asMap(GraphAlgorithms.labelPropagation(spark, sampled, 5))
+    assert(labels == declared("graph_label_prop"))
+    // Labels originate as self-labels and only propagate.
+    assert(labels.values.toSet.subsetOf(labels.keySet))
+  }
+
+  test("graph_closeness pins one BFS state copy and keeps its rows") {
+    GraftSession.dropLeftoverBlocks(spark)
+    val df = SparkEntry.queries("graph_closeness")(spark, sf)
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    assert(pinned <= 1, s"$pinned persisted RDDs after building graph_closeness")
+    // Local reference: per-seed BFS to depth 3 over the collected
+    // co-purchase graph, harmonic sum in sixths as the key computes it.
+    val adj = oriented.collect()
+      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    val seeds = Tables.t(spark, sf, "lineitem")
+      .select(col("l_partkey").as("node")).distinct()
+      .orderBy(md5(col("node").cast("string").cast("binary")), col("node"))
+      .limit(16).collect().map(_.getLong(0))
+    val expected = seeds.sorted.map { seed =>
+      var seen = Map(seed -> 0L)
+      var frontier = Seq(seed)
+      for (d <- 1L to 3L) {
+        frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
+          .distinct.filterNot(seen.contains)
+        seen ++= frontier.map(_ -> d)
+      }
+      val reached = seen.values.filter(_ > 0)
+      (seed, reached.size.toLong, reached.map(6 / _).sum)
+    }.filter(_._2 > 0).toSeq
+    val got = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 6))).toSeq
+    assert(got == expected)
   }
 }
