@@ -18,6 +18,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.OneTaskSortStrategy)
     // Top-k pushdown (rank-limit → TopKPerGroupNode). Injected into the
     // operator-optimization batch, so here it fires before the native
     // InferWindowGroupLimit and downstream pruning still cleans up.

@@ -3,6 +3,8 @@ package graft.plans
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -82,6 +84,7 @@ object GlobalRank {
     * cume = (offset + end-of-tie-run) / N. */
   def percentCume(df: DataFrame, keyCol: String): DataFrame = {
     val keyIdx = df.schema.fieldIndex(keyCol)
+    val keyType = df.schema(keyIdx).dataType
     scan[Long](df, Seq(keyCol),
       Seq(StructField("pr", DoubleType, nullable = false),
         StructField("cd", DoubleType, nullable = false)),
@@ -95,12 +98,14 @@ object GlobalRank {
         private var runStart = 0L
         private var emitted = 0
         private val buf = rows.buffered
-        // deepEquals: element-wise for array keys (Scala == on Array is
-        // reference equality and would split a tie run); boxed
-        // Double/Float equals already matches sort semantics
-        // (-0.0 ≠ 0.0, NaN = NaN — exactly java.lang.Double.compare).
+        // Peers are what the range sort itself ties: its ordering treats
+        // -0.0 = 0.0 and NaN = NaN, and compares binary and array keys
+        // by value, as `cume_dist()`/`percent_rank()` do.
+        private val toKey = CatalystTypeConverters.createToCatalystConverter(keyType)
+        private val ord = InterpretedOrdering.forSchema(Seq(keyType))
         private def sameKey(a: Row, b: Row): Boolean =
-          java.util.Objects.deepEquals(a.get(keyIdx), b.get(keyIdx))
+          ord.compare(InternalRow(toKey(a.get(keyIdx))),
+            InternalRow(toKey(b.get(keyIdx)))) == 0
         override def hasNext: Boolean = emitted < run.length || buf.hasNext
         override def next(): Row = {
           if (emitted == run.length) {

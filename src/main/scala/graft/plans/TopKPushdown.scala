@@ -146,12 +146,15 @@ object TopKPushdownRule extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 object TopKPushdown {
-  /** Install the rewrite + its planner strategy on a live session
-    * (idempotent). `GraftExtensions` injects both at session creation;
-    * this is the post-hoc path for plain sessions (Verify/Bench call it
-    * once at startup). */
+  /** Install the engine's planner additions on a live session
+    * (idempotent): this rewrite, its planner strategy and
+    * [[OneTaskSortStrategy]]. `GraftExtensions` injects the same three
+    * at session creation; this is the post-hoc path for plain sessions
+    * (`GraftSession.harness` and perfbench's `Harness` call it once at
+    * startup). */
   def install(spark: SparkSession): Unit = {
     graftshim.addStrategy(spark, TopKStrategy)
+    graftshim.addStrategy(spark, OneTaskSortStrategy)
     graftshim.addOptimizerRule(spark, TopKPushdownRule)
   }
 }

@@ -99,4 +99,27 @@ class DeterminismSpec extends SparkSpec {
         s"(${a.size} vs ${b.size} rows)")
     }
   }
+
+  test("one-task and range final sorts return identical rows") {
+    // These keys' final sort runs in one task below the broadcast
+    // threshold (OneTaskSortStrategy) and as Spark's range sort at -1.
+    // Both sorts are total, so the rows and their order must not move.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def run(q: String, threshold: Option[String]): (Seq[Row], String) = {
+      threshold.foreach(spark.conf.set(key, _))
+      try {
+        val df = SparkEntry.queries(q)(spark, sf)
+        (df.collect().toSeq, df.queryExecution.executedPlan.toString)
+      } finally spark.conf.unset(key)
+    }
+    for (q <- Seq("geo_step_length_percentiles", "stream_hourly_topk",
+      "pipeline_length_bias_audit")) {
+      val (ranged, rangedPlan) = run(q, Some("-1"))
+      val (oneTask, oneTaskPlan) = run(q, None)
+      assert(!rangedPlan.contains("OneTaskSort"), s"$q: $rangedPlan")
+      assert(oneTaskPlan.contains("OneTaskSort"), s"$q: $oneTaskPlan")
+      assert(ranged.nonEmpty && ranged == oneTask, s"$q rows moved " +
+        s"(${ranged.size} vs ${oneTask.size} rows)")
+    }
+  }
 }

@@ -1,13 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark.sql.extensions deployment path: a fresh session configured
   * with GraftExtensions exposes the custom expressions as SQL functions
   * without any registration calls.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends SparkSpec {
+
+  /** Stop whatever context another suite left running: spark.sql.extensions
+    * is a STATIC conf, read only when a session creates its context. */
+  private def stopActive(): Unit = {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.sparkContext.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+  }
 
   test("GraftExtensions injects array_dot, discount_band, tokenize") {
     // spark.sql.extensions is a STATIC conf: it only takes effect when the
@@ -15,10 +23,7 @@ class ExtensionsSpec extends AnyFunSuite {
     // session (SparkSpec) may have created one already — stop it so this
     // test exercises the real deployment path; later suites' lazy
     // getOrCreate transparently builds a fresh context afterwards.
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.sparkContext.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    stopActive()
     val s = SparkSession.builder()
       .master("local[2]")
       .appName("graft-ext-test")
@@ -83,5 +88,41 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
     }
+  }
+
+  test("GraftExtensions and TopKPushdown.install add the same planner additions") {
+    // The two registration paths: spark.sql.extensions at session
+    // creation, and install on a plain session (GraftSession.harness,
+    // perfbench's Harness). Both must add the same strategies and rules
+    // and so plan a key alike.
+    def additions(extensions: Boolean): (Set[AnyRef], Seq[String]) = {
+      stopActive()
+      val b = SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-ext-parity")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.ui.enabled", "false")
+      val s = (if (extensions) b.config("spark.sql.extensions", "graft.GraftExtensions")
+        else b).getOrCreate()
+      try {
+        if (!extensions) graft.plans.TopKPushdown.install(s)
+        val st = s.sessionState
+        val added: Set[AnyRef] = (st.planner.extraPlanningStrategies ++
+          st.experimentalMethods.extraStrategies ++
+          st.optimizer.extendedOperatorOptimizationRules ++
+          st.experimentalMethods.extraOptimizations).toSet
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        val ops = SparkEntry.queries("geo_step_length_percentiles")(s, sf)
+          .queryExecution.executedPlan
+          .collect { case p => p.nodeName }
+        (added, ops)
+      } finally stopActive()
+    }
+    val (extAdded, extOps) = additions(extensions = true)
+    val (installAdded, installOps) = additions(extensions = false)
+    assert(extAdded == installAdded)
+    assert(extAdded.contains(graft.plans.OneTaskSortStrategy), extAdded)
+    assert(extOps == installOps)
+    assert(extOps.contains("OneTaskSort"), extOps)
   }
 }

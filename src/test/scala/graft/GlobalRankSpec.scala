@@ -63,8 +63,7 @@ class GlobalRankSpec extends SparkSpec {
 
   test("binary-typed keys tie correctly (deep equality, not reference)") {
     // BINARY keys surface as Array[Byte] in external Rows, where == is
-    // REFERENCE equality — the case that genuinely requires deepEquals
-    // (ArrayType keys deserialize to Seq, whose == is already by value).
+    // REFERENCE equality: tie detection must compare them by value.
     val df = spark.range(100)
       .select(col("id"), expr("cast(cast(id % 4 AS STRING) AS BINARY)").as("k"))
     val got = withShufflePartitions(5)(GlobalRank.percentCume(df, "k"))
@@ -76,6 +75,24 @@ class GlobalRankSpec extends SparkSpec {
       assert(r.getLong(1) == 1 && r.getLong(2) == 1,
         s"array-key tie group ${r.getString(0)} split: $r")
     }
+  }
+
+  test("-0.0/0.0 and NaN ties match cume_dist/percent_rank (sort-order peers)") {
+    import spark.implicits._
+    // The sort orders -0.0 = 0.0 and NaN = NaN, so an alternating
+    // -0.0/0.0 run is ONE tie run, interleaved in stream order.
+    val keys = (0 until 20).map(i => if (i % 2 == 0) -0.0 else 0.0) ++
+      Seq.fill(10)(Double.NaN) ++ (30 until 40).map(_.toDouble)
+    val df = keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("id", "k")
+    val w = Window.orderBy(col("k"))
+    def byId(d: org.apache.spark.sql.DataFrame) = d
+      .select(col("id"), col("pr"), col("cd")).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val windowed = byId(df.select(col("id"),
+      percent_rank().over(w).as("pr"), cume_dist().over(w).as("cd")))
+    val twoPass = withShufflePartitions(3)(byId(GlobalRank.percentCume(df, "k")))
+    val bad = windowed.collect { case (i, v) if twoPass(i) != v => (i, v, twoPass(i)) }
+    assert(bad.isEmpty, s"${bad.size} of ${keys.size} rows differ, first: ${bad.headOption}")
   }
 
   test("two-pass runningSum == window cumsum, invariant across partitionings") {

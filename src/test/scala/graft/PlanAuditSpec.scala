@@ -1441,4 +1441,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"),
       s"rank must not be a global window: ${p.take(2500)}")
   }
+
+  /** [[plan]] with spark.sql.autoBroadcastJoinThreshold at `t`. */
+  private def planAt(name: String, t: String): String = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, t)
+    try plan(name) finally spark.conf.unset(key)
+  }
+
+  test("small final sort runs in one task: no range exchange under it") {
+    // Spark's range sort samples bounds with a job that re-runs the
+    // window and both percentile aggregates; one task sorts the
+    // per-user rows behind a single-partition exchange instead.
+    val p = plan("geo_step_length_percentiles")
+    assert(p.contains("OneTaskSort") && !p.contains("rangepartitioning"),
+      p.take(3000))
+    assert("Exchange SinglePartition".r.findAllIn(p).size == 1,
+      p.split("\n").filter(_.contains("Exchange")).mkString("\n"))
+    // Broadcasts off turns it off: Spark's range sort, as before.
+    val ranged = planAt("geo_step_length_percentiles", "-1")
+    assert(!ranged.contains("OneTaskSort") &&
+      "Exchange rangepartitioning".r.findAllIn(ranged).size == 1, ranged.take(3000))
+  }
+
+  test("a final sort over an unpartitioned window adds no exchange") {
+    // The window's output is already one partition in `day` order.
+    def exchanges(p: String) = "Exchange".r.findAllIn(p).size
+    val p = plan("etl_retention_plan")
+    val ranged = planAt("etl_retention_plan", "-1")
+    assert(exchanges(p) == exchanges(ranged) && exchanges(p) == 4,
+      p.split("\n").filter(_.contains("Exchange")).mkString("\n"))
+    assert(!ranged.contains("OneTaskSort"), ranged.take(3000))
+  }
 }
